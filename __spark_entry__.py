@@ -239,13 +239,12 @@ def q_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3xx Location resolution — the redirect discovery flow
-    (engine.run_round redir_src -> canon.resolve_discoveries). Four
-    Location forms are synthesized per url (seq % 4): absolute,
-    path-absolute + unsorted query, relative + fragment, and
-    protocol-relative; the oracle states each resolved target by
-    construction. Exercises the SAME fast-path/UDF split the engine
-    uses for anchor hrefs."""
+    """3xx Location resolution through canon.resolve_discoveries, the
+    DataFrame form of the canonicalization the engine's extract pass
+    applies to a Location (canon.canonical_child). Four Location
+    forms are synthesized per url (seq % 4): absolute, path-absolute +
+    unsorted query, relative + fragment, and protocol-relative; the
+    oracle states each resolved target by construction."""
     from pompspark.canon import resolve_discoveries
 
     f = _frontier(spark, sf_dir)

@@ -208,7 +208,6 @@ def mode_round():
 
 def mode_explain():
     from pompspark.benchgen import build_bench_pages
-    from pompspark.canon import resolve_discoveries
     from pompspark.frontier import dequeue
 
     spark = _spark()
@@ -251,20 +250,9 @@ def mode_explain():
     # merge plan over the last committed round files
     dirs = eng.cat.snapshot_dirs("fetch_log")
     round_df = spark.read.parquet(dirs[-1])
-    is_redir = F.col("status").between(300, 399) & F.col("location").isNotNull()
-    src = round_df.filter((F.col("status") == 200) | is_redir).select(
-        "url", "depth", "fetch_rank",
-        F.posexplode(
-            F.when(F.col("status") == 200, F.col("links"))
-            .otherwise(F.array("location"))
-        ).alias("pos", "href"),
-    )
-    disc = resolve_discoveries(src).select(
-        F.col("child").alias("url"),
-        F.col("child_host").alias("host"),
-        (F.col("depth") + 1).alias("depth"),
-        "fetch_rank", "pos",
-    )
+    from pompspark.engine import round_discoveries
+
+    disc = round_discoveries(round_df)
     from pompspark.frontier import new_frontier_rows
 
     rows = new_frontier_rows(disc, eng.store.identity_rows(), eng.robots_df,

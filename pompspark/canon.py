@@ -18,10 +18,20 @@ north rule mandates it, so the rules above are OUR pinned contract;
 ``tests/fixtures/canon_cases.json`` + the idempotence property test
 (c(c(u)) == c(u)) freeze them.
 
-Spark surface: ``canonicalize_udf`` — an Arrow-batched pandas UDF
-(never a per-row Python UDF). Hashing: ``url_hash_col`` uses the
-JVM-side ``F.hash`` (murmur3_32) paired with ``F.xxhash64`` when 64
-bits are needed for the seen-set at 10^10 scale.
+Where it runs:
+- crawl discoveries (anchor hrefs and 3xx Locations) are canonicalized
+  inside the fetch's extract pass (``canonical_child`` via
+  ``extract.extract_attach_arrow`` / ``extract.extract_response``),
+  against the page url already in that batch; the round files' ``links``
+  column holds the canonical children, so the link merge needs only
+  the JVM ``host_col`` and no Python worker;
+- seeds, bulk seeds and ``resolve_discoveries`` (metarobots, the
+  declared queries) use ``canonicalize_udf`` — an Arrow-batched pandas
+  UDF (never a per-row Python UDF) behind a JVM fast-path gate.
+
+Hashing: ``url_hash_col`` uses the JVM-side ``F.hash`` (murmur3_32)
+paired with ``F.xxhash64`` when 64 bits are needed for the seen-set at
+10^10 scale.
 """
 
 from __future__ import annotations
@@ -101,9 +111,10 @@ def canonicalize(url: str, base: str | None = None) -> str | None:
     url = url.strip()
     if not url or url.startswith("#"):
         return None
-    if base:
-        url = urljoin(base, url)
     try:
+        if base:
+            # urljoin parses the href too: a malformed one ('//[') raises
+            url = urljoin(base, url)
         parts = urlsplit(url)
     except ValueError:
         return None
@@ -138,6 +149,15 @@ def canonicalize(url: str, base: str | None = None) -> str | None:
 # idempotence property test fuzzes this equivalence.
 CANONICAL_PATTERN = r"^https?://[a-z0-9-]+(?:\.[a-z0-9-]+)+/[a-z0-9/_\-~]*$"
 _CANONICAL_RE = re.compile(CANONICAL_PATTERN)
+
+
+def canonical_child(href: str, base: str | None) -> str | None:
+    """``canonicalize(href, base)``, skipping urllib for an href that is
+    provably a fixed point (``fullmatch``: a trailing newline, which
+    ``$`` would let through, must take the stripping slow path)."""
+    if _CANONICAL_RE.fullmatch(href):
+        return href
+    return canonicalize(href, base)
 
 
 def canonicalize_series(urls: pd.Series, bases: pd.Series | None = None) -> pd.Series:
@@ -192,6 +212,27 @@ def host_series(urls: pd.Series) -> pd.Series:
 
 # ---------------------------------------------------------------- Spark side
 
+def host_col(url: str):
+    """JVM twin of ``host_of`` for ``canonicalize()`` output (no Python
+    worker; the link merge's only host derivation). It mirrors
+    ``urlsplit(...).hostname``: the netloc after the last '@', then the
+    text inside the first '[...]' or else the text before the first
+    ':'; '' is NULL, and so is a netloc with an unpaired bracket, where
+    ``urlsplit`` raises. Canonical hosts are already lowercased, so no
+    (JVM-Unicode) ``lower`` is applied. Only valid on canonical urls:
+    ``tests/test_canon.py`` pins parity with ``host_of`` there."""
+    from pyspark.sql import functions as F
+
+    netloc = F.regexp_extract(url, r"^[^:/?#]+://([^/?#]*)", 1)
+    hostinfo = F.substring_index(netloc, "@", -1)
+    host = F.when(
+        hostinfo.contains("["), F.regexp_extract(hostinfo, r"\[([^\]]*)", 1)
+    ).otherwise(F.substring_index(hostinfo, ":", 1))
+    return F.when(
+        netloc.contains("[") == netloc.contains("]"), F.nullif(host, F.lit(""))
+    )
+
+
 def register_udfs():
     """Build the pandas UDFs lazily (keeps this module importable without
     a SparkSession for the pure-python oracle tests)."""
@@ -216,9 +257,11 @@ def register_udfs():
 def resolve_discoveries(src, href_col: str = "href", base_col: str = "url"):
     """Resolve ``href_col`` against ``base_col`` -> (child, child_host)
     columns appended; rows whose href does not canonicalize (mailto:,
-    javascript:, garbage) are dropped. One shared implementation for
-    the two discovery flows (anchor links O9 and 3xx Location headers)
-    so their semantics can never drift.
+    javascript:, garbage) are dropped. The DataFrame form of the
+    discovery resolution, for hrefs that never pass through the fetch's
+    extract pass (metarobots canonical links, the declared queries);
+    the crawl engine's anchor links and 3xx Locations are resolved by
+    ``canonical_child`` in that pass, to the same children.
 
     Plan shape: hrefs matching CANONICAL_PATTERN are provably
     canonicalize() fixed points — the rlike gate + regexp_extract run

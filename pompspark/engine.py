@@ -116,6 +116,40 @@ def _metrics_rows(round_dir: str, round_: int, n_new: int,
     ]
 
 
+def round_discoveries(round_df: DataFrame) -> DataFrame:
+    """A round's discoveries as (url, host, depth, fetch_rank, pos) — the
+    input of frontier.new_frontier_rows. The fetch's extract pass
+    already canonicalized both discovery flows into ``links``
+    (extract.extract_response), so this runs on the JVM alone, with no
+    Python worker:
+
+    - anchor links of 200 responses, in (fetch_rank, pos) order; an
+      href that did not canonicalize is a null at its pos;
+    - 3xx Location headers, resolved against the REQUEST url exactly
+      like a relative href: a redirect row's links is the one-element
+      [resolved Location] (a 3xx has no anchors, so per-parent ordering
+      stays well-defined and the global (fetch_rank, pos) order matches
+      the oracle).
+
+    depth+1 per hop — redirect chains consume depth like link chains,
+    so trap/depth rules bound them and the frontier anti-join (O2)
+    terminates redirect cycles."""
+    from pompspark.canon import host_col
+
+    is_redir = F.col("status").between(300, 399) & F.col("location").isNotNull()
+    return (
+        round_df.filter((F.col("status") == 200) | is_redir)
+        .select("depth", "fetch_rank",
+                F.posexplode("links").alias("pos", "url"))
+        .filter(F.col("url").isNotNull())
+        .select(
+            "url", host_col("url").alias("host"),
+            (F.col("depth") + 1).alias("depth"), "fetch_rank", "pos",
+        )
+        .filter(F.col("host").isNotNull())
+    )
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -317,8 +351,8 @@ class CrawlEngine:
         locs, which must never pass through a driver-side list the way
         seed() seeds do).
 
-        Same canonicalization as the link merge (JVM rlike gate, the
-        pandas UDF sees only the non-canonical minority), exact
+        Same canonicalization as seed() (JVM rlike gate, the pandas
+        UDF sees only the non-canonical minority), exact
         anti-join against the frontier identity index, robots gating,
         and the frontier_transform hook. ``seq`` is xxhash64(url):
         bulk seeds have no meaningful list order, so within the seed
@@ -501,6 +535,13 @@ class CrawlEngine:
         """One round: dequeue -> fetch/extract -> sinks -> merge.
         Returns the number of urls fetched (0 = frontier exhausted).
 
+        One Python pass per round: the fetcher's extract pass returns
+        ``links`` as canonical children (extract.extract_response —
+        canonicalized against the page url, None where an href does not
+        canonicalize; a 3xx carries its resolved Location), and the
+        merge reads them with a JVM host expression (canon.host_col).
+        A custom fetcher must emit ``links`` the same way.
+
         Driver-job budget (the N->4N scaling term — every serial driver
         second divides throughput at BOTH cluster sizes but can't be
         parallelized away, so it caps efficiency): exactly TWO Spark
@@ -630,7 +671,9 @@ class CrawlEngine:
         # counters. No multi-GB round cache, no recomputed extract.
         round_out = fetched.select(
             "url", F.lit(r).alias("round"), "status", "warc_ts", "text",
-            F.size("links").alias("n_links"), "error",
+            # anchor count of a 200 (a 3xx's links hold its Location)
+            F.when(F.col("status") == 200, F.size("links"))
+            .otherwise(0).alias("n_links"), "error",
             # working columns (pruned away by fetch_log reads). seq and
             # state are precomputed so the trace and frontier_state
             # tables can ALIAS these files zero-copy (append_dir):
@@ -672,9 +715,12 @@ class CrawlEngine:
             # ceil(seconds / round_seconds), consulted by queued().
             # Clamped: a hostile 'Retry-After: 86400' must not make the
             # idle loop spin 86k empty rounds (the clamp also kills the
-            # long->int wrap an absurd header value would cause).
+            # long->int wrap an absurd header value would cause). A
+            # header that is not a positive number (negative, zero,
+            # NaN) is treated as absent: retry_delay_rounds applies.
             F.when(
-                (F.col("status") >= 500) & F.col("retry_after").isNotNull(),
+                (F.col("status") >= 500) & (F.col("retry_after") > 0)
+                & ~F.isnan("retry_after"),
                 F.least(
                     F.ceil(F.col("retry_after")
                            / F.lit(float(self.round_seconds))),
@@ -791,41 +837,8 @@ class CrawlEngine:
         metrics_thread = threading.Thread(target=_collect_metrics)
         metrics_thread.start()
 
-        # discoveries -> canonicalize -> dedup -> anti-join -> merge
-        # (O9/O2). Two discovery flows share ONE resolution pipeline
-        # (canon.resolve_discoveries: JVM rlike fast path, pandas UDF
-        # for the slow minority) AND one round-file scan:
-        # - anchor links of 200 responses, in (fetch_rank, pos) order;
-        # - 3xx Location headers, resolved against the REQUEST url
-        #   exactly like a relative href. A redirect row explodes its
-        #   single-element array(location) in place of links (a 3xx
-        #   has no links, so per-parent ordering stays well-defined
-        #   and the global (fetch_rank, pos) order matches the oracle).
-        # depth+1 per hop — redirect chains consume depth like link
-        # chains, so trap/depth rules bound them and the frontier
-        # anti-join (O2) terminates redirect cycles.
-        # NOT a union of two filtered scans: that shape re-read the
-        # round files and re-planned the merge, measured +70% on the
-        # links_merge stage at bench scale for an EMPTY redirect
-        # branch.
-        from pompspark.canon import resolve_discoveries
-
-        is_redir = F.col("status").between(300, 399) & F.col(
-            "location"
-        ).isNotNull()
-        src = round_df.filter((F.col("status") == 200) | is_redir).select(
-            "url", "depth", "fetch_rank",
-            F.posexplode(
-                F.when(F.col("status") == 200, F.col("links"))
-                .otherwise(F.array("location"))
-            ).alias("pos", "href"),
-        )
-        disc = resolve_discoveries(src).select(
-            F.col("child").alias("url"),
-            F.col("child_host").alias("host"),
-            (F.col("depth") + 1).alias("depth"),
-            "fetch_rank", "pos",
-        )
+        # discoveries -> dedup -> anti-join -> merge (O9/O2)
+        disc = round_discoveries(round_df)
         new_rows = new_frontier_rows(
             disc, self.store.identity_rows(), self.robots_df, r,
             seen_filter=self.seen_filter, robots_rows=self.robots_rows,
@@ -894,7 +907,9 @@ class CrawlEngine:
 
     def link_edges(self) -> DataFrame:
         """(host, links[]) rows of successful fetches — the input of
-        graph.host_rank_from_fetch_log's tier-crawl loop. Dir layout
+        graph.host_rank_from_fetch_log's tier-crawl loop. ``links`` are
+        the canonical children written by the fetch's extract pass
+        (None where an href did not canonicalize). Dir layout
         only: the working columns ride in the round files next to the
         declared FETCH_LOG schema (run_round's single materialization)
         and fetch_log() schema-projects them away; this reads them back

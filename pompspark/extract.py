@@ -4,11 +4,14 @@
 input_hint: "per-row invariant vs the reference: byte-identical
 extracted text per url"). It is pure-Python/regex, deterministic,
 locale-free, and operates on bytes only — no wall clock, no locale
-tables. The Spark path (``extract_udf_batches`` via ``mapInPandas`` /
-``pandas_udf``) calls the SAME function on Arrow batches, so
-byte-identity holds by construction; ``tests/test_extract.py`` still
-asserts it row-by-row on utf-8 bytes, and the engine re-checks it
-against the precomputed ``pages.text`` column.
+tables. The Spark paths (``extract_attach_arrow`` via ``mapInArrow``,
+``register_extract_udf`` as a pandas UDF) call the SAME function on
+Arrow batches, so byte-identity holds by construction;
+``tests/test_extract.py`` still asserts it row-by-row on utf-8 bytes.
+
+The crawl's extract pass (``extract_response``) also canonicalizes each
+href against the page url (``canon.canonical_child``), so the
+``links`` it emits are canonical children, not raw hrefs.
 
 pomp analog: ``BaseCrawler.extract_items(response)`` +
 ``BaseCrawler.next_requests(response)`` (pomp/core/base.py) — the user
@@ -23,7 +26,6 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-from typing import Iterator
 
 import pandas as pd
 
@@ -73,6 +75,28 @@ def ref_extract(html: bytes) -> tuple[str, list[str]]:
     return text, links
 
 
+def extract_response(html: bytes | None, base: str,
+                     location: str | None) -> tuple[str | None, list]:
+    """One response -> (text, canonical children): the crawl's single
+    Python pass per fetched row, shared by both fetchers.
+
+    A body (the caller passes it for 200s only) gives ``ref_extract``'s
+    text and its hrefs resolved against ``base`` by
+    ``canon.canonical_child`` (position-aligned, None where an href
+    does not canonicalize, so the merge's ``posexplode`` keeps each
+    anchor's position). No body but a 3xx ``location`` gives
+    (None, [the Location resolved the same way]). Neither gives
+    (None, [])."""
+    from pompspark.canon import canonical_child
+
+    if html is not None:
+        text, hrefs = ref_extract(html)
+        return text, [canonical_child(h, base) for h in hrefs]
+    if location is not None:
+        return None, [canonical_child(location, base)]
+    return None, []
+
+
 def extract_frame(html_series: pd.Series) -> pd.DataFrame:
     """Vectorized wrapper: one Arrow batch of html -> DataFrame with
     ``text`` (str) and ``links`` (list[str]) columns."""
@@ -107,18 +131,23 @@ def register_extract_udf():
 
 
 def extract_attach_arrow(df, html_col: str = "html"):
-    """Append ``text``/``links`` extracted from ``html_col`` and DROP
-    the html column — pyarrow-native ``mapInArrow`` (r6, guide §4.2).
+    """Append ``text``/``links`` from ``extract_response`` over
+    (``html_col``, ``url``, ``location``) and DROP the html column —
+    pyarrow-native ``mapInArrow`` (r6, guide §4.2).
+
+    ``links`` holds canonical children aligned by position with the
+    page's hrefs (None where an href does not canonicalize); a row with
+    NULL html and a non-NULL location gets [that Location, resolved];
+    any other NULL-html row gets text=NULL, links=[]. The caller nulls
+    html off the 200 path and location off the 3xx path.
 
     Vs the pandas_udf column path this skips the Arrow->pandas->Arrow
     conversion layers on both sides (binary Series materialization in,
     object-Series-of-lists to list<string> out); measured ~2.7 s/round
     at bench scale on identical output (bench/fetch_boundary_ab.py:
     pandas 15.6-16.4 s vs arrow 13.2-13.4 s on the same joined hits).
-    NULL html rows yield text=NULL, links=[] — exactly the pandas
-    path's ``when(ok, ...)`` gating when the caller nulls html for
-    non-200 rows. Remains a narrow map op: fuses into the caller's
-    scan/join stage, no exchange."""
+    Remains a narrow map op: fuses into the caller's scan/join stage,
+    no exchange."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -134,17 +163,16 @@ def extract_attach_arrow(df, html_col: str = "html"):
 
     def gen(batches):
         for rb in batches:
+            bases = rb.column("url").to_pylist()
+            locs = rb.column("location").to_pylist()
             texts: list = []
             links: list = []
-            for h in rb.column(html_col):
-                hv = h.as_py()
-                if hv is None:
-                    texts.append(None)
-                    links.append([])
-                else:
-                    t, l = ref_extract(hv)
-                    texts.append(t)
-                    links.append(l)
+            # one body at a time: a whole batch of ~30 KB bodies as
+            # Python bytes would raise each worker's peak memory
+            for h, b, loc in zip(rb.column(html_col), bases, locs):
+                t, l = extract_response(h.as_py(), b, loc)
+                texts.append(t)
+                links.append(l)
             cols = [rb.column(n) for n in keep_names]  # zero-copy
             yield pa.RecordBatch.from_arrays(
                 cols
@@ -156,28 +184,3 @@ def extract_attach_arrow(df, html_col: str = "html"):
             )
 
     return df.mapInArrow(gen, schema=out_schema)
-
-
-def extract_map_in_pandas(df, html_col: str = "html"):
-    """mapInPandas variant for when the whole row flows through Python
-    anyway (e.g. a real HTTP fetch stage on a cluster). Preserves all
-    input columns, appends text + links."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("text", T.StringType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ext = extract_frame(b[html_col])
-            b = b.copy()
-            b["text"] = ext["text"]
-            b["links"] = ext["links"]
-            yield b
-
-    return df.mapInPandas(gen, schema=out_schema)

@@ -130,14 +130,13 @@ class SimulatedFetcher:
         ok = status == 200
         # r6 (guide §4.2): everything EXCEPT the extraction stays JVM
         # (status/error/byte-count logic), then ONE pyarrow-native
-        # mapInArrow attaches text+links and drops html. The html of
-        # non-200 rows is nulled BEFORE the boundary, so failed rows
-        # ship a null bitmap instead of 30 KB bodies, and the
-        # passthrough columns (~150 B/row) ride zero-copy next to the
-        # one heavy column. Output identical to the previous
-        # pandas_udf column path (text NULL / links [] off the ok
-        # path); measured ~2.7 s/round cheaper at bench scale
-        # (bench/fetch_boundary_ab.py). Still a narrow map: fuses into
+        # mapInArrow attaches text + canonical links and drops html.
+        # The html of non-200 rows is nulled BEFORE the boundary, so
+        # failed rows ship a null bitmap instead of 30 KB bodies, and
+        # the passthrough columns (~150 B/row) ride zero-copy next to
+        # the one heavy column; a 301's Location (non-null only on
+        # redirect rows) is resolved in the same pass, so the round's
+        # only Python hop is this one. Still a narrow map: fuses into
         # the scan/join stage, no exchange.
         from pompspark.extract import extract_attach_arrow
 
@@ -201,8 +200,9 @@ class HttpFetcher:
     warc_ts:datetime64, html:object(bytes), error:object]`` — inject a
     deterministic fake in tests; the default stub documents where a
     requests/aiohttp pool goes on a real cluster (that lib is not in
-    this container). Extraction happens in the same pass — one Python
-    hop per row batch, not two.
+    this container). Extraction and link canonicalization happen in the
+    same pass (``extract.extract_response``, as in SimulatedFetcher) —
+    one Python hop per row batch, not two.
     """
 
     paced = True  # the engine attaches slot_s (politeness.schedule_slots)
@@ -222,7 +222,7 @@ class HttpFetcher:
     def fetch(self, batch: DataFrame) -> DataFrame:
         from pyspark.sql import types as T
 
-        from pompspark.extract import extract_frame
+        from pompspark.extract import extract_response
 
         transport = self.transport
         if transport is None:
@@ -277,11 +277,19 @@ class HttpFetcher:
                 "retry_after", pd.Series([None] * len(b), index=b.index)
             )
             b["n_bytes"] = b["html"].map(lambda h: len(h) if h is not None else 0)
-            ext = extract_frame(b["html"].where(b["status"] == 200, None))
-            b["text"] = ext["text"].where(b["status"] == 200, None)
-            b["links"] = ext["links"].where(
-                b["status"] == 200, pd.Series([[]] * len(b), index=b.index)
-            )
+            # body for 200s only (an empty 200 extracts as ""), Location
+            # for 3xx only; links = canonical children
+            ext = [
+                extract_response(
+                    (h if h is not None else b"") if st == 200 else None,
+                    u,
+                    loc if 300 <= st <= 399 and pd.notna(loc) else None,
+                )
+                for h, u, loc, st in zip(b["html"], b["url"], b["location"],
+                                         b["status"])
+            ]
+            b["text"] = [t for t, _ in ext]
+            b["links"] = [l for _, l in ext]
             return b
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -94,7 +94,8 @@ class OracleCrawl:
     # page's warc_ts <= the epoch's if_modified_since validator.
     not_modified: set[str] | None = None
     # per-url Retry-After cool-down in ROUNDS (5xx Retry-After header,
-    # already divided by round_seconds); missing urls use
+    # already divided by round_seconds); missing urls, and values that
+    # are not positive (negative, zero, NaN headers), use
     # retry_delay_rounds. Mirrors frontier.queued()'s per-row coalesce.
     retry_after_rounds: dict[str, int] | None = None
     max_retries: int = 0
@@ -132,6 +133,11 @@ class OracleCrawl:
                    if rule_match(p)), default=0)
         return dis > alw
 
+    def _retry_delay(self, url: str) -> int:
+        d = (self.retry_after_rounds or {}).get(url)
+        # NaN fails d > 0 too
+        return d if d is not None and d > 0 else self.retry_delay_rounds
+
     def _cap(self, host: str) -> int:
         r = (self.robots or {}).get(host)
         if not r or not r.get("crawl_delay"):
@@ -168,9 +174,7 @@ class OracleCrawl:
                 e for e in self.entries.values()
                 if e.state == "queued"
                 or (e.state == "retry"
-                    and rnd - e.retry_round
-                    >= (self.retry_after_rounds or {}).get(
-                        e.url, self.retry_delay_rounds))
+                    and rnd - e.retry_round >= self._retry_delay(e.url))
             ]
             if not queued:
                 if any(e.state == "retry" for e in self.entries.values()):

@@ -110,3 +110,107 @@ def test_canonical_pattern_implies_fixed_point():
                 assert canonicalize(u) == u, u
 
     check()
+
+
+def _jvm_hosts(spark, urls):
+    from pompspark.canon import host_col
+
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)],
+                               "i int, url string")
+    got = dict(df.select("i", host_col("url").alias("h")).collect())
+    return [got[i] for i in range(len(urls))]
+
+
+def test_host_col_matches_host_of_on_case_file(spark):
+    """The merge's JVM host expression equals host_of on every canonical
+    output of the fixture cases, plus canonical forms where host_of is
+    None (a bracketed IPv6 host loses its brackets; an unpaired ']' in
+    userinfo makes urlsplit raise)."""
+    with open(CASES_PATH) as f:
+        cases = json.load(f)
+    raw = [(c["raw"], c.get("base")) for c in cases] + [
+        ("http://[::1]/x", None), ("http://[::1]:8080/x", None),
+        ("http://[fe80::1%25eth0]/", None), ("http://u:p@[v1.fe]/", None),
+        ("http://a]b@[v1.x]/", None), ("http://[::1]@Host.example:81/", None),
+        ("http://a@b@H.example/", None), ("http://:p@h.example:/", None),
+    ]
+    canon = [c for c in (canonicalize(u, b) for u, b in raw) if c is not None]
+    want = [host_of(c) for c in canon]
+    assert None in want and sum(w is not None for w in want) >= 30
+    assert _jvm_hosts(spark, canon) == want
+
+
+_HOSTS = ["a.example", "Sub.B.EXAMPLE", "x-y.example", "[::1]", "[2001:db8::7]",
+          "[fe80::1%25en0]", "[v1.fe]", "10.0.0.1", "h"]
+_PATHS = ["", "/", "/a/b", "/a/../b", "/%2e%2e/c", "/A%7eb/./c/..", "/p q",
+          "/x%2Fy", "/.."]
+
+
+def _href_strategy():
+    from hypothesis import strategies as st
+
+    userinfo = st.sampled_from(["", "u@", "u:p@", ":p@", "U:P@", "a@b@", "x]y@"])
+    port = st.sampled_from(["", ":80", ":443", ":8080", ":", ":0"])
+    scheme = st.sampled_from(["http:", "https:", "HTTP:", "ftp:", ""])
+    query = st.sampled_from(["", "?b=2&a=1", "?q=a+b&", "?%7e=1", "#frag", "?x#y"])
+    absolute = st.builds(
+        lambda s, ui, h, po, pa, q: f"{s}//{ui}{h}{po}{pa}{q}",
+        scheme, userinfo, st.sampled_from(_HOSTS), port,
+        st.sampled_from(_PATHS), query,
+    )
+    relative = st.builds(lambda pa, q: pa.lstrip("/") + q,
+                         st.sampled_from(_PATHS + ["../..", "./z", "..%2fq"]),
+                         query)
+    pseudo = st.sampled_from(["mailto:q@r.example", "javascript:void(0)",
+                              "#top", "", "  ", "tel:123", "data:,x"])
+    return st.one_of(absolute, relative, pseudo,
+                     st.text(alphabet="aZ09/.:%@[]?#&=+-_~ ", max_size=25))
+
+
+def test_host_col_matches_host_of_fuzz(spark):
+    """Hypothesis fuzz: userinfo, ports, upper case, '..', '%2e',
+    protocol-relative '//host' hrefs, bracketed IPv6, pseudo-schemes —
+    every canonical output gets host_col == host_of."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    bases = st.sampled_from(["http://m.example/d/e", "https://M.example:8443/",
+                             "http://u@[::1]/d/"])
+
+    @settings(max_examples=25, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(st.lists(st.tuples(_href_strategy(), bases), min_size=1, max_size=40))
+    def check(pairs):
+        canon = [c for c in (canonicalize(h, b) for h, b in pairs) if c is not None]
+        if canon:
+            assert _jvm_hosts(spark, canon) == [host_of(c) for c in canon]
+
+    check()
+
+
+def test_extract_pass_children_equal_canonicalize(spark):
+    """The extract pass's children equal canonicalize(href, page url)
+    byte for byte, over fuzzed hrefs placed in real anchors."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from pompspark.extract import extract_attach_arrow, ref_extract
+
+    bases = ["http://m.example/d/e", "https://M.example:8443/x/",
+             "http://u@[::1]/d/"]
+
+    @settings(max_examples=15, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(st.lists(st.lists(_href_strategy(), max_size=6), min_size=1,
+                    max_size=len(bases)))
+    def check(pages):
+        rows = []
+        for base, hrefs in zip(bases, pages):
+            html = "".join(f'<a href="{h}">x</a>' for h in hrefs).encode("utf-8")
+            rows.append((base, html, None))
+        df = spark.createDataFrame(rows, "url string, html binary, location string")
+        got = {r.url: list(r.links) for r in extract_attach_arrow(df).collect()}
+        for base, html, _ in rows:
+            assert got[base] == [canonicalize(h, base) for h in ref_extract(html)[1]]
+
+    check()

@@ -1,5 +1,7 @@
 """Byte-identity contract for the extractor (SURVEY §5.2.2): the Spark
-pandas UDF must produce byte-identical text vs ``ref_extract`` per row."""
+paths must produce byte-identical text vs ``ref_extract`` per row, and
+the crawl's extract pass must emit ``canonicalize(href, page url)`` per
+anchor."""
 
 from __future__ import annotations
 
@@ -68,14 +70,91 @@ def test_spark_udf_byte_identity(spark):
         assert list(r.udf_links) == SMALL_SITEMAP[r.url]
 
 
-def test_map_in_pandas_variant(spark):
-    from pompspark.extract import extract_map_in_pandas
+def test_extract_attach_arrow_canonical_links(spark):
+    """The crawl's extract pass: byte-identical text, and ``links`` =
+    canonicalize(href, page url) per anchor, position-aligned with the
+    raw hrefs (None where an href does not canonicalize); a NULL body
+    with a Location resolves the Location the same way."""
+    from pyspark.sql import functions as F
 
-    pages = small_pages_df(spark).select("url", "html", "text")
-    out = extract_map_in_pandas(pages.withColumnRenamed("text", "expected"))
-    rows = out.select("url", "expected", "text").collect()
-    for r in rows:
-        assert r.text == r.expected
+    from pompspark.canon import canonicalize
+    from pompspark.extract import extract_attach_arrow
+
+    messy = b'<a href="../x?b=2&a=1#f">r</a><a href="mailto:q@r">m</a>' \
+        b'<a href="HTTP://B.Example:80/%7ey">u</a><a href="//c.example">p</a>'
+    pages = small_pages_df(spark).select(
+        "url", "html", "text", F.lit(None).cast("string").alias("location"),
+    ).union(spark.createDataFrame(
+        [("http://m.example/d/e", messy, ref_extract(messy)[0], None),
+         ("http://m.example/d/r", None, None, "moved/here"),
+         ("http://m.example/d/n", None, None, None)],
+        "url string, html binary, text string, location string",
+    ))
+    out = extract_attach_arrow(pages.withColumnRenamed("text", "expected"))
+    assert "html" not in out.columns
+    rows = {r.url: r for r in out.collect()}
+    assert len(rows) == len(SMALL_SITEMAP) + 3
+    for url, kids in SMALL_SITEMAP.items():
+        assert rows[url].text.encode("utf-8") == rows[url].expected.encode("utf-8")
+        assert list(rows[url].links) == kids  # fixture hrefs are canonical
+    m = rows["http://m.example/d/e"]
+    assert m.text == m.expected
+    assert list(m.links) == [
+        "http://m.example/x?a=1&b=2", None, "http://b.example/~y",
+        "http://c.example/",
+    ]
+    assert list(m.links) == [
+        canonicalize(h, "http://m.example/d/e") for h in ref_extract(messy)[1]
+    ]
+    assert rows["http://m.example/d/r"].text is None
+    assert list(rows["http://m.example/d/r"].links) == ["http://m.example/d/moved/here"]
+    assert rows["http://m.example/d/n"].text is None
+    assert list(rows["http://m.example/d/n"].links) == []
+
+
+def test_http_fetcher_canonical_links_and_location(spark):
+    """HttpFetcher runs the same extract pass: a relative href comes
+    back canonical, a 301's raw Location stays in ``location`` and its
+    resolved target is the row's one link; other non-200s get none."""
+    import pandas as pd
+
+    from pompspark.fetch import HttpFetcher
+
+    bodies = {
+        "http://x.example/dir/page": b'<a href="sub/a?z=1&y=2">a</a>'
+                                     b'<a href="javascript:void(0)">j</a>',
+        "http://x.example/dir/empty": b"<p>nothing</p>",
+    }
+
+    def transport(urls: pd.Series) -> pd.DataFrame:
+        status = urls.map(lambda u: 301 if "old" in u
+                          else 503 if "busy" in u else 200)
+        return pd.DataFrame({
+            "status": status,
+            "warc_ts": pd.Series([pd.Timestamp("2024-01-01")] * len(urls),
+                                 index=urls.index),
+            "html": urls.map(bodies.get),
+            "location": urls.map(
+                lambda u: "../new/Here" if "old" in u
+                else "/ignored" if "busy" in u else None),
+        })
+
+    batch = spark.createDataFrame(
+        [(u,) for u in ("http://x.example/dir/page", "http://x.example/dir/empty",
+                        "http://x.example/dir/old", "http://x.example/dir/busy")],
+        ["url"],
+    )
+    out = {r.url: r for r in HttpFetcher(transport).fetch(batch).collect()}
+    page = out["http://x.example/dir/page"]
+    assert page.status == 200 and page.text == "a j"
+    assert list(page.links) == ["http://x.example/dir/sub/a?y=2&z=1", None]
+    assert list(out["http://x.example/dir/empty"].links) == []
+    old = out["http://x.example/dir/old"]
+    assert old.status == 301 and old.text is None
+    assert old.location == "../new/Here"
+    assert list(old.links) == ["http://x.example/new/Here"]
+    # a Location on a non-3xx answer is not a discovery
+    assert list(out["http://x.example/dir/busy"].links) == []
 
 
 def test_ws_collapse_equivalence():

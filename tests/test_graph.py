@@ -192,6 +192,14 @@ def test_tier_crawl_end_to_end(spark, tmp_path):
     e1.run(max_rounds=50)
     base_trace = [r.url for r in e1.trace().collect()]
 
+    # link_edges reads the canonical children the extract pass wrote
+    from pompspark.canon import host_of
+    from pompspark.fixtures import SMALL_SITEMAP
+
+    edges = sorted((r.host, tuple(r.links)) for r in e1.link_edges().collect())
+    assert edges == sorted(
+        (host_of(u), tuple(kids)) for u, kids in SMALL_SITEMAP.items()
+    )
     ranks = host_rank_from_fetch_log(e1.link_edges(), iters=4)
     rank_map = {r["host"]: r["rank"] for r in ranks.collect()}
     # host graph of the fixture sitemap: a->b, a->c, b->c

@@ -259,3 +259,30 @@ def test_quota_sample_single_exchange_on_quota_key(spark, tmp_path):
     plan = _plan(quota_sample(docs, "source", 5, F.col("doc_id").asc()))
     assert len(re.findall(r"\bExchange hashpartitioning\(source", plan)) == 1, plan
     assert "rangepartitioning" not in plan, plan
+
+
+def test_link_merge_runs_without_python(spark, tmp_path):
+    """The round's only Python pass is the fetch's extract: the link
+    merge (canonical ``links`` -> posexplode -> JVM host -> anti-join)
+    plans with no ArrowEvalPython / BatchEvalPython node, on a real
+    engine round with no seen filter, and still admits new rows."""
+    from pompspark.engine import simulated_engine
+    from pompspark.fixtures import SMALL_SEED, small_pages_df
+
+    eng = simulated_engine(
+        spark, str(tmp_path / "m"), small_pages_df(spark),
+        ordering="bfs", per_round_budget=5, per_host_budget=5,
+    )
+    eng.seed([SMALL_SEED])
+    plans: list[str] = []
+    append_delta = eng.store.append_delta
+
+    def spy(rows):
+        plans.append(_plan(rows))
+        return append_delta(rows)
+
+    eng.store.append_delta = spy
+    assert eng.run_round() == 1
+    assert len(plans) == 1
+    assert "EvalPython" not in plans[0], plans[0]
+    assert eng.cat.row_count("frontier") == 4  # seed + its 3 children

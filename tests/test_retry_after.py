@@ -98,3 +98,44 @@ def test_retry_after_longer_than_idle_default(spark, tmp_path):
     assert log[0][1] == 503
     assert log[-1][1] == 200, "retry must eventually succeed"
     assert log[-1][0] - log[0][0] >= 4, "cool-down honored"
+
+
+def test_non_positive_retry_after_is_absent(spark, tmp_path):
+    """A Retry-After that is not a positive number (negative, zero,
+    NaN) is treated as absent: the url cools down for the engine-wide
+    retry_delay_rounds, exactly like a 5xx without the header (a
+    negative header used to give a negative cool-down, so the retry
+    jumped the default delay)."""
+    headers = {"http://a.example/p1": -5.0, "http://b.example/p0": float("nan"),
+               "http://c.example/p0": 0.0}
+    flaky = F.create_map(*[F.lit(x) for u in headers for x in (u, 1)])
+    ra = F.create_map(*[F.lit(x) for kv in headers.items() for x in kv])
+    pages = (
+        small_pages_df(spark)
+        .withColumn("flaky_fails", F.coalesce(flaky[F.col("url")], F.lit(0)))
+        .withColumn("retry_after_s", ra[F.col("url")])
+    )
+    eng = simulated_engine(
+        spark, str(tmp_path / "ra-bad"), pages, ordering="bfs",
+        per_round_budget=3, per_host_budget=2, max_retries=1,
+        retry_delay_rounds=3, compact_every=2,
+    )
+    eng.seed([SMALL_SEED])
+    eng.run(max_rounds=60)
+    got = [
+        (r.round, (int(r.seq) % S_ROUND) // S_RANK, r.url, r.depth, r.host)
+        for r in eng.trace().collect()
+    ]
+    sim = OracleCrawl(
+        sitemap=SMALL_SITEMAP, ordering="bfs", per_round_budget=3,
+        per_host_budget=2, flaky={u: 1 for u in headers}, max_retries=1,
+        retry_delay_rounds=3,
+        # round_seconds=1: a header's seconds are its rounds
+        retry_after_rounds=headers,
+    )
+    sim.seed([SMALL_SEED])
+    sim.run()
+    assert got == sim.trace_tuples()
+    for u in headers:
+        rounds = sorted(r for (r, _k, v, _d, _h) in got if v == u)
+        assert len(rounds) == 2 and rounds[1] - rounds[0] >= 3, u
