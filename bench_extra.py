@@ -255,7 +255,7 @@ def mode_explain():
     disc = round_discoveries(round_df)
     from pompspark.frontier import new_frontier_rows
 
-    rows = new_frontier_rows(disc, eng.store.identity_rows(), eng.robots_df,
+    rows = new_frontier_rows(disc, eng._identity_set(), eng.robots_df,
                              r, robots_rows=eng.robots_rows)
     dump(rows, "bench_links_merge")
     spark.stop()

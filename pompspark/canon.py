@@ -126,6 +126,10 @@ def canonicalize(url: str, base: str | None = None) -> str | None:
     host = (parts.hostname or "").lower()
     if not host:
         return None
+    if "[" in parts.netloc.rpartition("@")[2]:
+        # an IPv6 / IPvFuture literal keeps its brackets: without them
+        # the result is no url (c(c(u)) would be None)
+        host = f"[{host}]"
     try:
         port = parts.port
     except ValueError:
@@ -146,16 +150,20 @@ def canonicalize(url: str, base: str | None = None) -> str | None:
 # port/userinfo, absolute path of unreserved chars (no '.', so no dot
 # segments; no '%', so no pct-normalization; no '?'/'#'). For such u,
 # canonicalize(u) == u, so the slow urllib path can be skipped. The
-# idempotence property test fuzzes this equivalence.
-CANONICAL_PATTERN = r"^https?://[a-z0-9-]+(?:\.[a-z0-9-]+)+/[a-z0-9/_\-~]*$"
+# idempotence property test fuzzes this equivalence. The end anchor is
+# ``(?![\s\S])`` (the absolute end in both Python ``re`` and Java
+# ``rlike``): ``$`` also matches before a trailing line terminator,
+# which would let "http://a.example/p\n" through unstripped.
+CANONICAL_PATTERN = (
+    r"^https?://[a-z0-9-]+(?:\.[a-z0-9-]+)+/[a-z0-9/_\-~]*(?![\s\S])"
+)
 _CANONICAL_RE = re.compile(CANONICAL_PATTERN)
 
 
 def canonical_child(href: str, base: str | None) -> str | None:
     """``canonicalize(href, base)``, skipping urllib for an href that is
-    provably a fixed point (``fullmatch``: a trailing newline, which
-    ``$`` would let through, must take the stripping slow path)."""
-    if _CANONICAL_RE.fullmatch(href):
+    provably a fixed point."""
+    if _CANONICAL_RE.match(href):
         return href
     return canonicalize(href, base)
 

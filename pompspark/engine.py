@@ -50,6 +50,15 @@ Transform = Callable[[DataFrame], DataFrame]
 
 TABLES = ["frontier", "frontier_state", "fetch_log", "metrics", "trace", "seen"]
 
+# Frontier rows from which the merge anti-joins read the bucketed
+# frontier_index instead of the frontier's own (url_hash, url) columns
+# (smallest measured size where the index wins; crossover table in
+# SCALE.md item 3). Below it the identity set is small enough that AQE
+# broadcasts it anyway, and the index is pure upkeep: a bucketed append
+# job per round (write tasks x buckets new files) and one merge scan
+# task per index file.
+INDEX_MIN_ROWS = 1_000_000
+
 
 def check_speculation_safe(spark, fetcher) -> None:
     """Refuse a paced fetcher on a speculative session.
@@ -336,11 +345,7 @@ class CrawlEngine:
         rows = self._transform_frontier(rows)
         _n, seeded = self.store.append_delta(rows)
         self._frontier_rows += _n
-        if seeded is not None:
-            if self.store.use_index:
-                self.store.index_append(seeded)
-            if self.seen_filter is not None:
-                self.seen_filter.add(seeded.select("url_hash"))
+        self._track_identity(seeded)
         self._checkpoint(budget_left=0)
         return self.cat.current_version("frontier")
 
@@ -353,7 +358,8 @@ class CrawlEngine:
 
         Same canonicalization as seed() (JVM rlike gate, the pandas
         UDF sees only the non-canonical minority), exact
-        anti-join against the frontier identity index, robots gating,
+        anti-join against the frontier identity set (``_identity_set``),
+        robots gating,
         and the frontier_transform hook. ``seq`` is xxhash64(url):
         bulk seeds have no meaningful list order, so within the seed
         priority class the dequeue order is deterministic HASH order
@@ -399,7 +405,7 @@ class CrawlEngine:
             .dropDuplicates(["url"])
             .withColumn("url_hash", F.xxhash64("url"))
         )
-        fresh = _anti_join_existing(d, self.store.identity_rows())
+        fresh = _anti_join_existing(d, self._identity_set())
         fresh = with_robots(fresh, self.robots_df, robots_rows=self.robots_rows)
         rows = fresh.select(
             "url", *_identity_cols(F.col("url"))[:2], "host",
@@ -413,13 +419,36 @@ class CrawlEngine:
         rows = self._transform_frontier(rows)
         n_new, seeded = self.store.append_delta(rows)
         self._frontier_rows += n_new
-        if seeded is not None:
-            if self.store.use_index:
-                self.store.index_append(seeded)
-            if self.seen_filter is not None:
-                self.seen_filter.add(seeded.select("url_hash"))
+        self._track_identity(seeded)
         self._checkpoint(budget_left=0)
         return n_new
+
+    def _identity_set(self) -> DataFrame:
+        """The merge anti-joins' identity set, picked from
+        ``_frontier_rows``: below INDEX_MIN_ROWS the frontier's own
+        pruned (url_hash, url) columns; from there on the bucketed
+        frontier_index, which the first such call builds from the
+        frontier and ``_track_identity`` keeps current from then on."""
+        store = self.store
+        if store.use_index and (
+            store.index_ready or self._frontier_rows >= INDEX_MIN_ROWS
+        ):
+            return store.identity_rows()
+        return store.all_rows().select("url_hash", "url")
+
+    def _track_identity(self, added: DataFrame | None) -> None:
+        """Follow a frontier append (``added``: its rows, None when
+        empty) in the derived identity structures: the bucketed index
+        while it is maintained (its marker follows the frontier version
+        even when nothing was added) and the seen filter."""
+        store = self.store
+        if store.index_ready:
+            if added is not None:
+                store.index_append(added)
+            else:
+                store._write_marker()
+        if added is not None and self.seen_filter is not None:
+            self.seen_filter.add(added.select("url_hash"))
 
     def _checkpoint(self, budget_left: int) -> None:
         # driver-side pyarrow commit (Catalog.append_rows): a 1-row
@@ -453,8 +482,13 @@ class CrawlEngine:
             # the bucketed merge index may be a SUPERSET of the rolled-
             # back frontier (appends after the checkpoint) — a stale
             # entry would suppress a url the resumed crawl must
-            # re-discover. Derived state: rebuild from the frontier.
-            self.store.index_rebuild()
+            # re-discover. Derived state: rebuild it from the frontier
+            # where the merge reads it, else drop its marker so the
+            # first round past the gate rebuilds it.
+            if self._frontier_rows >= INDEX_MIN_ROWS:
+                self.store.index_rebuild()
+            else:
+                self.store.index_invalidate()
         return self.round
 
     def refresh_robots(self, transport, now=None, ttl_s: float = 86400.0) -> None:
@@ -548,7 +582,12 @@ class CrawlEngine:
         actions per round on the no-middleware path — the dequeue
         materialization (count doubles as the cache fill the fetch
         broadcast reads from) and the round write; the merge write is
-        the third. Row counts come from committed parquet FOOTERS
+        the third. Below INDEX_MIN_ROWS frontier rows that is all (the
+        merge anti-join reads the frontier's own columns); from there on
+        the bucketed index append is a fourth, plus an index rewrite
+        whenever it passes FrontierStore.INDEX_FILES_PER_BUCKET files
+        per bucket, and the first indexed round builds the index from
+        the frontier. Row counts come from committed parquet FOOTERS
         (tables.dir_row_count — the Iceberg manifest-count analog) and
         metrics/checkpoint rows are pyarrow driver commits
         (Catalog.append_rows), not Spark jobs."""
@@ -840,7 +879,7 @@ class CrawlEngine:
         # discoveries -> dedup -> anti-join -> merge (O9/O2)
         disc = round_discoveries(round_df)
         new_rows = new_frontier_rows(
-            disc, self.store.identity_rows(), self.robots_df, r,
+            disc, self._identity_set(), self.robots_df, r,
             seen_filter=self.seen_filter, robots_rows=self.robots_rows,
             seen_exact=self.seen_mode == "exact",
         )
@@ -851,16 +890,12 @@ class CrawlEngine:
         n_new, new_back = self.store.append_delta(new_rows)
         self._frontier_rows += n_new
         lap("links_merge")
-        if n_new:
-            if self.store.use_index:
-                self.store.index_append(new_back)
-            if self.seen_filter is not None:
-                self.seen_filter.add(new_back.select("url_hash"))
-                # bound delta accrual independently of compact_every:
-                # broadcast-path membership is O(delta dirs) per round
-                self.seen_filter.maybe_compact()
-        elif self.store.use_index:
-            self.store._write_marker()  # version advanced by the append
+        self._track_identity(new_back)
+        if n_new and self.seen_filter is not None:
+            # bound delta accrual independently of compact_every:
+            # broadcast-path membership is O(delta dirs) per round
+            self.seen_filter.maybe_compact()
+        lap("index_upkeep")
 
         # metrics: per-partition lineage rows ([A] north rule), derived
         # from the round files' footers + two pruned columns on the

@@ -55,6 +55,45 @@ def test_host_of():
     assert host_of(None) is None
 
 
+@pytest.mark.parametrize("raw,want", [
+    ("http://[::1]/x", "http://[::1]/x"),
+    ("HTTP://[::1]:80/x", "http://[::1]/x"),
+    ("http://[::1]:8080/x", "http://[::1]:8080/x"),
+    ("http://[2001:DB8::7]/a/../b", "http://[2001:db8::7]/b"),
+    ("http://u:p@[v1.fe]/", "http://u:p@[v1.fe]/"),
+])
+def test_ipv6_host_keeps_brackets(raw, want):
+    """A bracketed host stays bracketed: the result is a fixed point and
+    host_of gives the bare address (as host_col does)."""
+    got = canonicalize(raw)
+    assert got == want
+    assert canonicalize(got) == got
+    assert host_of(got) == want.split("[")[1].split("]")[0]
+
+
+@pytest.mark.parametrize("end", ["\n", "\r", "\r\n"])
+def test_trailing_line_terminator_is_stripped(spark, end):
+    """CANONICAL_PATTERN anchors at the absolute end in Python and in
+    the JVM: a url with a trailing line terminator is not taken as
+    canonical by either fast path and canonicalizes to the stripped
+    url."""
+    import re
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pompspark.canon import CANONICAL_PATTERN, canonicalize_series
+
+    u = "http://a.example/p" + end
+    assert re.match(CANONICAL_PATTERN, u) is None
+    assert re.match(CANONICAL_PATTERN, "http://a.example/p")
+    got = spark.createDataFrame([(u,), ("http://a.example/p",)], "url string") \
+        .select(F.col("url").rlike(CANONICAL_PATTERN).alias("m")).collect()
+    assert [r.m for r in got] == [False, True]
+    assert canonicalize_series(pd.Series([u, None])).tolist() == [
+        "http://a.example/p", None]
+
+
 def test_canonicalize_udf(spark):
     from pyspark.sql import functions as F
 
@@ -123,9 +162,9 @@ def _jvm_hosts(spark, urls):
 
 def test_host_col_matches_host_of_on_case_file(spark):
     """The merge's JVM host expression equals host_of on every canonical
-    output of the fixture cases, plus canonical forms where host_of is
-    None (a bracketed IPv6 host loses its brackets; an unpaired ']' in
-    userinfo makes urlsplit raise)."""
+    output of the fixture cases and of bracketed (IPv6, IPvFuture)
+    hosts, and on a netloc with an unpaired ']' (urlsplit raises, so
+    both give None)."""
     with open(CASES_PATH) as f:
         cases = json.load(f)
     raw = [(c["raw"], c.get("base")) for c in cases] + [
@@ -133,11 +172,16 @@ def test_host_col_matches_host_of_on_case_file(spark):
         ("http://[fe80::1%25eth0]/", None), ("http://u:p@[v1.fe]/", None),
         ("http://a]b@[v1.x]/", None), ("http://[::1]@Host.example:81/", None),
         ("http://a@b@H.example/", None), ("http://:p@h.example:/", None),
+        ("//[2001:db8::7]:81/q", "http://m.example/"), ("../y", "http://[::1]/d/e"),
     ]
     canon = [c for c in (canonicalize(u, b) for u, b in raw) if c is not None]
     want = [host_of(c) for c in canon]
-    assert None in want and sum(w is not None for w in want) >= 30
+    assert sum(w is not None for w in want) >= 30
+    # bracketed hosts survive canonicalization with their bare address
+    assert {"::1", "fe80::1%25eth0", "v1.fe", "2001:db8::7"} <= set(want)
     assert _jvm_hosts(spark, canon) == want
+    unpaired = "http://a]b@h.example/"
+    assert _jvm_hosts(spark, [unpaired]) == [host_of(unpaired)] == [None]
 
 
 _HOSTS = ["a.example", "Sub.B.EXAMPLE", "x-y.example", "[::1]", "[2001:db8::7]",
@@ -184,6 +228,8 @@ def test_host_col_matches_host_of_fuzz(spark):
         canon = [c for c in (canonicalize(h, b) for h, b in pairs) if c is not None]
         if canon:
             assert _jvm_hosts(spark, canon) == [host_of(c) for c in canon]
+            # every canonical url is a fixed point with a host (IPv6 too)
+            assert all(canonicalize(c) == c and host_of(c) for c in canon)
 
     check()
 
@@ -214,3 +260,19 @@ def test_extract_pass_children_equal_canonicalize(spark):
             assert got[base] == [canonicalize(h, base) for h in ref_extract(html)[1]]
 
     check()
+
+
+def test_seed_frontier_strips_trailing_line_terminator(spark, tmp_path):
+    """Bulk seeds with a trailing '\\n' / '\\r' take the canonicalizing
+    slow path of seed_frontier's JVM gate: the frontier holds the
+    stripped urls, each once."""
+    from pompspark.engine import simulated_engine
+    from pompspark.fixtures import small_pages_df
+
+    eng = simulated_engine(spark, str(tmp_path / "s"), small_pages_df(spark))
+    urls = spark.createDataFrame(
+        [("http://a.example/p\n",), ("http://a.example/p\r",),
+         ("http://b.example/q\r\n",)], "url string")
+    assert eng.seed_frontier(urls) == 2
+    got = sorted(r.url for r in eng.cat.read("frontier").collect())
+    assert got == ["http://a.example/p", "http://b.example/q"]
