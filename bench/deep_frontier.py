@@ -195,7 +195,13 @@ def main() -> None:
                 statistics.median(nocomp[-3:]) / statistics.median(nocomp[:3]), 3)
 
     # ---- control: full-scan dequeue on the SAME state ---------------
+    # the dequeue reads any band layout the store has, so drop the band
+    # marker (after any in-flight compaction wrote its own) and stop
+    # laying out bands at compaction, to scan in full
+    eng._join_compact()
     eng.banded_dequeue = False
+    if os.path.exists(eng.store.band_marker_path()):
+        os.remove(eng.store.band_marker_path())
     control: list[dict] = []
     for i in range(compare_rounds):
         r0 = time.monotonic()

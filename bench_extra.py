@@ -7,8 +7,8 @@ record. This file exists to attribute the round's wall time to its
 operators and to A/B single optimizations. Modes (argv[1]):
 
   gen      time build_bench_pages -> parquet (the bench's gen_pages)
-  gentext  A/B: full-page extract UDF vs per-doc precompute, and
-           verify byte-identity of the two text columns
+  gentext  time the per-doc text precompute and verify byte-identity
+           with ref_extract on a sample of pages
   round    engine warm-up + instrumented rounds with per-stage
            sub-timings (dequeue parts, fetch join vs join+extract,
            round write, merge parts), each isolated via noop writes
@@ -78,32 +78,23 @@ def mode_gen():
 
 
 def mode_gentext():
-    """A/B the text computation inside build_bench_pages and verify
-    byte-identity between the legacy full-page UDF and the per-doc
-    precompute on every page."""
+    """Time the text computation inside build_bench_pages and verify
+    byte-identity against ``ref_extract`` of each page's own html on a
+    1-in-1000 hash sample of the pages (checked on the driver)."""
     from pompspark.benchgen import build_bench_pages
+    from pompspark.extract import ref_extract
 
     spark = _spark()
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-
-    for variant in ("legacy", "fast"):
-        os.environ["BENCHGEN_TEXT_MODE"] = variant
-        df = build_bench_pages(spark, docs, n_pages=N_PAGES)
-        _noop(df.select("url", "text"), f"gentext:{variant}", spark)
-    # identity check: run both, join on url, count mismatches
-    os.environ["BENCHGEN_TEXT_MODE"] = "legacy"
-    a = build_bench_pages(spark, docs, n_pages=N_PAGES).select(
-        "url", F.col("text").alias("ta")
-    )
-    os.environ["BENCHGEN_TEXT_MODE"] = "fast"
-    b = build_bench_pages(spark, docs, n_pages=N_PAGES).select(
-        "url", F.col("text").alias("tb")
-    )
+    df = build_bench_pages(spark, docs, n_pages=N_PAGES)
+    _noop(df.select("url", "text"), "gentext", spark)
     spark.sparkContext.setJobDescription("gentext:identity-check")
-    bad = a.join(b, "url").filter(
-        ~F.col("ta").eqNullSafe(F.col("tb"))
-    ).count()
-    print(json.dumps({"text_mismatches": bad}), flush=True)
+    sample = df.filter(
+        F.pmod(F.xxhash64("url"), F.lit(1000)) == 0
+    ).select("html", "text").collect()
+    bad = sum(ref_extract(bytes(r.html))[0] != r.text for r in sample)
+    print(json.dumps({"text_checked": len(sample), "text_mismatches": bad}),
+          flush=True)
     spark.stop()
     if bad:
         sys.exit(1)

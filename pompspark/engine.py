@@ -10,7 +10,8 @@ pomp analog, stage by stage (pomp/core/engine.py Pomp.pump):
     downloader.get       -> fetcher.fetch (join or mapInPandas batch)
     process_response(s)  -> response_middlewares, reverse order
     process_exception    -> status/error columns; errors never throw
-    extract_items        -> the extract UDF inside the fetcher
+    extract_items        -> the extract pass inside the fetcher
+                            (extract.extract_attach_arrow)
     on_parse_result      -> items -> pipelines -> fetch_log append;
                             requests -> link merge -> frontier append
     StopCommand          -> empty dequeue ends the loop
@@ -40,7 +41,6 @@ from pompspark.frontier import (
     S_RANK,
     S_ROUND,
     FrontierStore,
-    dequeue,
     new_frontier_rows,
     normalize_seeds,
 )
@@ -58,6 +58,14 @@ TABLES = ["frontier", "frontier_state", "fetch_log", "metrics", "trace", "seen"]
 # job per round (write tasks x buckets new files) and one merge scan
 # task per index file.
 INDEX_MIN_ROWS = 1_000_000
+
+# Buckets of the frontier_index table (FrontierStore index_buckets).
+INDEX_BUCKETS = 32
+
+# Cap on a server-supplied Retry-After cool-down, in rounds: a day-long
+# header must not park the idle loop for 86k rounds (real crawlers
+# clamp to minutes).
+MAX_RETRY_DELAY_ROUNDS = 100
 
 
 def check_speculation_safe(spark, fetcher) -> None:
@@ -176,13 +184,11 @@ class CrawlEngine:
         compact_every: int = 8,
         max_retries: int = 0,
         retry_delay_rounds: int = 1,
-        max_retry_delay_rounds: int = 100,
         use_seen_filter: bool = False,
         seen_shards: int = 16,
         seen_capacity_per_shard: int = 1_000_000,
         seen_mode: str = "exact",
         use_bucketed_index: bool = True,
-        index_buckets: int = 32,
         banded_dequeue: bool = False,
         catalog=None,
         frontier_transform: Callable[[DataFrame], DataFrame] | None = None,
@@ -208,10 +214,9 @@ class CrawlEngine:
         self.compact_every = compact_every
         self.max_retries = max_retries
         self.retry_delay_rounds = retry_delay_rounds
-        # cap on a server-supplied Retry-After cool-down, in rounds
-        # (a day-long header must not park the idle loop for 86k
-        # rounds; real crawlers clamp to minutes)
-        self.max_retry_delay_rounds = max_retry_delay_rounds
+        # whether compaction lays the queued rows out in sort-key-prefix
+        # bands; the dequeue reads whatever layout the store has
+        # (frontier.dequeue_banded: full scan when there are no bands)
         self.banded_dequeue = banded_dequeue
         # r6 (guide §2.6, r5 verdict composed-mode finding: a 25.3 s
         # synchronous compact inside a 74.7 s round): compaction runs
@@ -224,9 +229,10 @@ class CrawlEngine:
         # frontier with a post-trim state table (see
         # FrontierStore.compact docstring). Off by default so that
         # table contents observed right after a run_round() are
-        # deterministic (tests, ad-hoc callers); the composed-scale
-        # configuration (bench/deep_frontier.py) turns it on, and
-        # run() always joins the thread before returning.
+        # deterministic (tests, ad-hoc callers): the same routine then
+        # runs inline and is joined at once (``_compact``). The
+        # composed-scale configuration (bench/deep_frontier.py) turns
+        # it on, and run() always joins the thread before returning.
         self.async_compact = async_compact
         self._compact_thread = None
         self._compact_error: BaseException | None = None
@@ -238,8 +244,11 @@ class CrawlEngine:
         # dequeue knowing about it. Schema is re-pinned after the call.
         self.frontier_transform = frontier_transform
 
+        # the approximate merge never reads the identity set, so it
+        # never builds or maintains the bucketed index
         self.store = FrontierStore(
-            self.cat, index_buckets=index_buckets, use_index=use_bucketed_index
+            self.cat, index_buckets=INDEX_BUCKETS,
+            use_index=use_bucketed_index and seen_mode == "exact",
         )
         # running frontier row count (footer-derived at init, then
         # maintained from append deltas — zero extra Spark jobs): the
@@ -302,21 +311,20 @@ class CrawlEngine:
         snapshot a half-committed compaction pair), and before
         resume/rollback."""
         t = self._compact_thread
-        if t is None:
-            return
-        t.join()
-        self._compact_thread = None
-        if self._compact_error is not None:
-            err = self._compact_error
-            self._compact_error = None
-            self._compact_finish = None
+        if t is not None:
+            t.join()
+            self._compact_thread = None
+        err, fin = self._compact_error, self._compact_finish
+        self._compact_error = self._compact_finish = None
+        if err is not None:
             raise err
-        fin = self._compact_finish
-        self._compact_finish = None
         if fin is not None:
             fin()
 
-    def _start_compact(self, band_col) -> None:
+    def _compact(self, band_col) -> None:
+        """The one compaction routine: fold the frontier (state trim
+        deferred) and compact the seen filter — on a background thread
+        with ``async_compact``, else inline and joined at once."""
         self._join_compact()  # at most one in flight
         store, seen = self.store, self.seen_filter
 
@@ -327,9 +335,13 @@ class CrawlEngine:
                 )
                 if seen is not None:
                     seen.compact()
-            except BaseException as e:  # surfaced at the next join
+            except BaseException as e:  # surfaced at the join
                 self._compact_error = e
 
+        if not self.async_compact:
+            _run()
+            self._join_compact()
+            return
         try:
             from pyspark import InheritableThread as _T
         except ImportError:  # pragma: no cover
@@ -574,7 +586,19 @@ class CrawlEngine:
         canonicalized against the page url, None where an href does not
         canonicalize; a 3xx carries its resolved Location), and the
         merge reads them with a JVM host expression (canon.host_col).
-        A custom fetcher must emit ``links`` the same way.
+
+        Fetcher column contract (both fetchers in pompspark.fetch emit
+        it; a custom fetcher must too — nothing is backfilled): the
+        batch's ``url``, ``url_hash``, ``host``, ``depth``,
+        ``fetch_rank`` and ``attempt`` columns, plus ``status`` (int),
+        ``warc_ts``, ``text`` (null off the 200 path), ``links``
+        (canonical children as above), ``n_bytes``, ``error``,
+        ``location`` (raw 3xx Location header or null) and
+        ``retry_after`` (5xx Retry-After seconds as double, or null).
+
+        The dequeue is frontier.dequeue_banded: it reads the store's
+        band layout when compaction left one (``banded_dequeue``) and
+        scans the whole queued frontier otherwise.
 
         Driver-job budget (the N->4N scaling term — every serial driver
         second divides throughput at BOTH cluster sizes but can't be
@@ -603,41 +627,17 @@ class CrawlEngine:
 
         self.last_round_timings = timings
 
-        if self.banded_dequeue:
-            from pompspark.frontier import dequeue_banded
-
-            raw, n_dequeued, self.last_bands_read = dequeue_banded(
-                self.store, self.robots_df, ordering=self.ordering,
-                robots_rows=self.robots_rows,
-                n_queued_hint=self._frontier_rows,
-                per_round_budget=round_budget or self.per_round_budget,
-                per_host_budget=self.per_host_budget,
-                round_seconds=self.round_seconds,
-                current_round=r,
-                retry_delay_rounds=self.retry_delay_rounds,
-                retry_enabled=self.max_retries > 0,
-            )
-        else:
-            raw = dequeue(
-                self.store.queued(
-                    current_round=r, retry_delay_rounds=self.retry_delay_rounds,
-                    retry_enabled=self.max_retries > 0,
-                ),
-                self.robots_df,
-                ordering=self.ordering,
-                robots_rows=self.robots_rows,
-                per_round_budget=round_budget or self.per_round_budget,
-                per_host_budget=self.per_host_budget,
-                round_seconds=self.round_seconds,
-                n_queued_hint=self._frontier_rows,
-            )
-            raw = raw.persist()
-            n_dequeued = frontier_mod.materialize_batch(raw)
-            # raw's cache now backs every downstream read; the top-k's
-            # internal sort cache (if the parallel path ran) is done.
-            topk_cache = getattr(raw, "_topk_cache", None)
-            if topk_cache is not None:
-                topk_cache.unpersist()
+        raw, n_dequeued, self.last_bands_read = frontier_mod.dequeue_banded(
+            self.store, self.robots_df, ordering=self.ordering,
+            robots_rows=self.robots_rows,
+            n_queued_hint=self._frontier_rows,
+            per_round_budget=round_budget or self.per_round_budget,
+            per_host_budget=self.per_host_budget,
+            round_seconds=self.round_seconds,
+            current_round=r,
+            retry_delay_rounds=self.retry_delay_rounds,
+            retry_enabled=self.max_retries > 0,
+        )
         lap("dequeue")
         if n_dequeued == 0:
             raw.unpersist()
@@ -690,16 +690,6 @@ class CrawlEngine:
         fetched = self.fetcher.fetch(fetch_in)
         for mw in reversed(self.response_middlewares):  # pomp reverse order
             fetched = mw(fetched)
-        if "location" not in fetched.columns:
-            # custom fetchers predating redirect support
-            fetched = fetched.withColumn(
-                "location", F.lit(None).cast("string")
-            )
-        if "retry_after" not in fetched.columns:
-            # custom fetchers predating Retry-After support
-            fetched = fetched.withColumn(
-                "retry_after", F.lit(None).cast("double")
-            )
 
         # ONE materialization per round: the fetch/extract output is
         # written exactly once — as the fetch_log data files, with the
@@ -763,7 +753,7 @@ class CrawlEngine:
                 F.least(
                     F.ceil(F.col("retry_after")
                            / F.lit(float(self.round_seconds))),
-                    F.lit(int(self.max_retry_delay_rounds)),
+                    F.lit(MAX_RETRY_DELAY_ROUNDS),
                 ),
             ).cast("int").alias("retry_delay"),
         )
@@ -920,17 +910,11 @@ class CrawlEngine:
             from pompspark.frontier import BAND_COL
 
             band = BAND_COL[self.ordering] if self.banded_dequeue else None
-            if self.async_compact:
-                # overlap with the next round's dequeue + fetch; the
-                # deferred state trim lands at that round's
-                # _join_compact (guide §2.6 back-fill pattern)
-                self._start_compact(band)
-                lap("compact_submit")
-            else:
-                self.store.compact(band_col=band)
-                if self.seen_filter is not None:
-                    self.seen_filter.compact()
-                lap("compact")
+            # async: overlaps the next round's dequeue + fetch; the
+            # deferred state trim lands at that round's _join_compact
+            # (guide §2.6 back-fill pattern)
+            self._compact(band)
+            lap("compact_submit" if self.async_compact else "compact")
         return n_dequeued
 
     # ------------------------------------------------------------ outputs

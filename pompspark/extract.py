@@ -4,9 +4,9 @@
 input_hint: "per-row invariant vs the reference: byte-identical
 extracted text per url"). It is pure-Python/regex, deterministic,
 locale-free, and operates on bytes only — no wall clock, no locale
-tables. The Spark paths (``extract_attach_arrow`` via ``mapInArrow``,
-``register_extract_udf`` as a pandas UDF) call the SAME function on
-Arrow batches, so byte-identity holds by construction;
+tables. The one Spark path, ``extract_attach_arrow`` (a ``mapInArrow``
+kernel shared by both fetchers and by benchgen's page text), calls the
+SAME function on Arrow batches, so byte-identity holds by construction;
 ``tests/test_extract.py`` still asserts it row-by-row on utf-8 bytes.
 
 The crawl's extract pass (``extract_response``) also canonicalizes each
@@ -26,8 +26,6 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-
-import pandas as pd
 
 # Tag classes whose *content* is dropped entirely.
 _DROP_CONTENT_RE = re.compile(
@@ -97,39 +95,6 @@ def extract_response(html: bytes | None, base: str,
     return None, []
 
 
-def extract_frame(html_series: pd.Series) -> pd.DataFrame:
-    """Vectorized wrapper: one Arrow batch of html -> DataFrame with
-    ``text`` (str) and ``links`` (list[str]) columns."""
-    texts: list[str] = []
-    links: list[list[str]] = []
-    for h in html_series:
-        t, l = ref_extract(h)
-        texts.append(t)
-        links.append(l)
-    return pd.DataFrame({"text": texts, "links": links}, index=html_series.index)
-
-
-# ---------------------------------------------------------------- Spark side
-
-EXTRACT_STRUCT_DDL = "text string, links array<string>"
-
-
-def register_extract_udf():
-    """pandas UDF html:binary -> struct<text:string, links:array<string>>.
-
-    Arrow-batched; the hot path stays vectorized per input_hint ("no
-    per-row Python"). Used as a column expression so Catalyst can
-    pipeline it inside the fetch round's single stage.
-    """
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf(EXTRACT_STRUCT_DDL)
-    def extract_udf(html: pd.Series) -> pd.DataFrame:
-        return extract_frame(html)
-
-    return extract_udf
-
-
 def extract_attach_arrow(df, html_col: str = "html"):
     """Append ``text``/``links`` from ``extract_response`` over
     (``html_col``, ``url``, ``location``) and DROP the html column —
@@ -141,13 +106,13 @@ def extract_attach_arrow(df, html_col: str = "html"):
     any other NULL-html row gets text=NULL, links=[]. The caller nulls
     html off the 200 path and location off the 3xx path.
 
-    Vs the pandas_udf column path this skips the Arrow->pandas->Arrow
-    conversion layers on both sides (binary Series materialization in,
-    object-Series-of-lists to list<string> out); measured ~2.7 s/round
-    at bench scale on identical output (bench/fetch_boundary_ab.py:
-    pandas 15.6-16.4 s vs arrow 13.2-13.4 s on the same joined hits).
-    Remains a narrow map op: fuses into the caller's scan/join stage,
-    no exchange."""
+    It replaced a pandas_udf column path (deleted): that path added
+    Arrow->pandas->Arrow conversion layers on both sides (binary Series
+    materialization in, object-Series-of-lists to list<string> out) and
+    measured ~2.7 s/round slower at bench scale on identical output
+    (pandas 15.6-16.4 s vs arrow 13.2-13.4 s on the same joined hits,
+    r6 32-core host). Remains a narrow map op: fuses into the caller's
+    scan/join stage, no exchange."""
     import pyarrow as pa
     from pyspark.sql import types as T
 

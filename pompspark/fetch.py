@@ -33,7 +33,7 @@ RESPONSE_COLS = ["status", "warc_ts", "html", "text", "links", "error",
 
 
 class SimulatedFetcher:
-    """Fetch = left join batch -> pages on url, then the extract UDF.
+    """Fetch = left join batch -> pages on url, then the extract pass.
 
     Physical plan: the batch (≤ per_round_budget rows) is the SMALL
     side — broadcast it and stream the pages scan exactly once per

@@ -312,6 +312,18 @@ def dequeue(
 BAND_COL = {"bfs": "depth", "dfs": "discovered_round"}
 
 
+def _dequeue_persisted(queued: DataFrame, **kw) -> tuple[DataFrame, int]:
+    """``dequeue`` -> persisted, validated batch and its row count;
+    the parallel top-k's internal sort cache is released once the
+    batch's own cache backs every downstream read."""
+    batch = dequeue(queued, **kw).persist()
+    n = materialize_batch(batch)
+    cache = getattr(batch, "_topk_cache", None)
+    if cache is not None:
+        cache.unpersist()
+    return batch, n
+
+
 def dequeue_banded(
     store: "FrontierStore",
     robots_df: DataFrame,
@@ -326,10 +338,15 @@ def dequeue_banded(
     robots_rows: int | None = None,
     n_queued_hint: int | None = None,
 ) -> tuple[DataFrame, int, int]:
-    """Band-pruned dequeue: read sort-key-prefix bands of the queued
-    frontier in key order, growing the prefix geometrically, and STOP
-    as soon as the politeness-capped selection fills the round budget.
-    Returns (persisted batch, n_rows, bands_read).
+    """The engine's one dequeue entry: the persisted, materialized
+    fetch batch. Returns (persisted batch, n_rows, bands_read).
+
+    Without a valid band layout for ``ordering`` (never compacted with
+    bands, or the table moved past the band marker) this is ``dequeue``
+    over the whole queued frontier, and bands_read is -1. With one, it
+    reads sort-key-prefix bands of the queued frontier in key order,
+    growing the prefix geometrically, and STOPS as soon as the
+    politeness-capped selection fills the round budget.
 
     EXACTNESS: bands are ordered by a strict prefix of the sort key
     ((priority desc, depth asc) for BFS; (priority desc,
@@ -352,22 +369,21 @@ def dequeue_banded(
     banded trace-equivalence grid). At a 10^10-row frontier with a
     10^7 budget this reads the active crawl band(s), not the whole
     table, each round."""
+    dq_kw = dict(
+        robots_df=robots_df, ordering=ordering,
+        per_round_budget=per_round_budget, per_host_budget=per_host_budget,
+        round_seconds=round_seconds,
+        parallel_topk_threshold=parallel_topk_threshold,
+        robots_rows=robots_rows, n_queued_hint=n_queued_hint,
+    )
     info = store.band_info()
     want_col = BAND_COL[ordering]
     if info is None or info["band_col"] != want_col:
         # no valid banded layout for this ordering: full scan
-        batch = dequeue(
+        return (*_dequeue_persisted(
             store.queued(current_round, retry_delay_rounds, retry_enabled),
-            robots_df, ordering, per_round_budget, per_host_budget,
-            round_seconds, parallel_topk_threshold, robots_rows,
-            n_queued_hint=n_queued_hint,
-        )
-        batch = batch.persist()
-        n = materialize_batch(batch)
-        cache = getattr(batch, "_topk_cache", None)
-        if cache is not None:
-            cache.unpersist()
-        return batch, n, -1
+            **dq_kw,
+        ), -1)
 
     band_col = info["band_col"]
     pairs = []
@@ -400,16 +416,7 @@ def dequeue_banded(
         eligible = store.queued(
             current_round, retry_delay_rounds, retry_enabled, source=src
         )
-        batch = dequeue(
-            eligible, robots_df, ordering, per_round_budget,
-            per_host_budget, round_seconds, parallel_topk_threshold,
-            robots_rows, n_queued_hint=n_queued_hint,
-        )
-        batch = batch.persist()
-        n = materialize_batch(batch)
-        cache = getattr(batch, "_topk_cache", None)
-        if cache is not None:
-            cache.unpersist()
+        batch, n = _dequeue_persisted(eligible, **dq_kw)
         if exhausted:
             return batch, n, i
         if n >= per_round_budget:
@@ -1053,18 +1060,15 @@ class FrontierStore:
         compacted queued rows out in sort-key-prefix bands for the
         band-pruned dequeue.
 
-        ``incremental`` (default): fold and rewrite ONLY the queued
-        partition — terminal-state files are never rewritten (r3
-        verdict #5: a full compact at 10^10 rows is a 1.2 TB rewrite
-        per call). Sound because transitions can only reference rows
-        that were dequeued, and only ``state='queued'`` rows are ever
-        dequeued — every non-queued row's fold is the identity. Old
-        dirs get a manifest-level ``state != 'queued'`` exclusion
+        Fold and rewrite ONLY the queued partition — terminal-state
+        files are never rewritten (r3 verdict #5: a full compact at
+        10^10 rows is a 1.2 TB rewrite per call). Sound because
+        transitions can only reference rows that were dequeued, and
+        only ``state='queued'`` rows are ever dequeued — every
+        non-queued row's fold is the identity. Old dirs get a
+        manifest-level ``state != 'queued'`` exclusion
         (Catalog.replace_partition); the folded output (still-queued +
         newly-terminal + retry-pending rows) lands in one new dir.
-        ``incremental=False`` does the classic full rewrite (bounds
-        total dir count; a real deployment would run it rarely, like
-        Iceberg's full rewrite_data_files).
 
         ``defer_state_trim`` (r6 async compact, guide §2.6): commit
         only the FRONTIER fold here and return a zero-arg ``finish``
@@ -1079,17 +1083,7 @@ class FrontierStore:
         concurrent reader sees either (old frontier, old state) or
         (folded frontier, old state), and both are exact (the fold is
         redundant with the anti-join, never contradictory)."""
-        return self._compact(band_col, incremental=True,
-                             defer_state_trim=defer_state_trim)
-
-    def compact_full(self, band_col: str | None = None) -> None:
-        self._compact(band_col, incremental=False)
-
-    def _compact(self, band_col: str | None, incremental: bool,
-                 defer_state_trim: bool = False):
-        f = self.cat.read("frontier")
-        if incremental:
-            f = f.filter(F.col("state") == "queued")
+        f = self.cat.read("frontier").filter(F.col("state") == "queued")
         t = self.cat.read("frontier_state")
         latest = t.groupBy(
             F.col("url_hash").alias("__s_hash"), F.col("url").alias("__s_url")
@@ -1116,13 +1110,10 @@ class FrontierStore:
         kept = kept.persist()
         kept.count()  # materialize before overwriting its source table
         partition_by = ["state"] + ([ "priority", band_col] if band_col else [])
-        if incremental:
-            v = self.cat.replace_partition(
-                "frontier", folded, "state", "queued",
-                partition_by=partition_by,
-            )
-        else:
-            v = self.cat.overwrite("frontier", folded, partition_by=partition_by)
+        v = self.cat.replace_partition(
+            "frontier", folded, "state", "queued", partition_by=partition_by,
+        )
+
         def _trim_state() -> None:
             self.cat.overwrite("frontier_state", kept.select(*[
                 fld.name for fld in self._state_schema.fields

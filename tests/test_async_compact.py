@@ -90,3 +90,39 @@ def test_async_compact_joined_at_run_exit(spark, tmp_path):
     assert eng._compact_thread is None
     assert eng._compact_finish is None
     assert eng._compact_error is None
+
+
+@pytest.mark.parametrize("async_compact", [False, True])
+def test_compact_failure_is_raised(spark, tmp_path, monkeypatch,
+                                   async_compact):
+    """A failing FrontierStore.compact surfaces in both modes: from the
+    compacting run_round when synchronous, at the next join when in the
+    background. Either way the engine is left holding no thread,
+    finish hook or error."""
+    from pompspark.frontier import FrontierStore
+
+    def boom(self, *a, **kw):
+        raise RuntimeError("compact failed")
+
+    monkeypatch.setattr(FrontierStore, "compact", boom)
+    eng = simulated_engine(
+        spark, str(tmp_path / f"fail-{async_compact}"), small_pages_df(spark),
+        robots_df=small_robots_df(spark), ordering="bfs",
+        per_round_budget=4, per_host_budget=2, compact_every=1,
+        async_compact=async_compact,
+    )
+    eng.seed([SMALL_SEED])
+    if async_compact:
+        # round 1 submits the compaction and returns; its failure is
+        # raised where the next round (or run()'s exit) joins it
+        assert eng.run_round() > 0
+        assert eng.round == 1
+        with pytest.raises(RuntimeError, match="compact failed"):
+            eng.run(max_rounds=3)
+    else:
+        with pytest.raises(RuntimeError, match="compact failed"):
+            eng.run_round()
+        assert eng.round == 1  # raised after the round's checkpoint
+    assert eng._compact_thread is None
+    assert eng._compact_finish is None
+    assert eng._compact_error is None

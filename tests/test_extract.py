@@ -51,25 +51,6 @@ def test_pages_fixture_text_is_ref_extract():
         assert links == SMALL_SITEMAP[row["url"]]
 
 
-def test_spark_udf_byte_identity(spark):
-    """Every row: utf-8 bytes of UDF text == bytes of ref_extract text,
-    and links match exactly."""
-    from pompspark.extract import register_extract_udf
-
-    pages = small_pages_df(spark)
-    udf = register_extract_udf()
-    out = (
-        pages.withColumn("ext", udf("html"))
-        .select("url", "text", "ext.text", "ext.links")
-        .toDF("url", "expected_text", "udf_text", "udf_links")
-        .collect()
-    )
-    assert len(out) == len(SMALL_SITEMAP)
-    for r in out:
-        assert r.udf_text.encode("utf-8") == r.expected_text.encode("utf-8"), r.url
-        assert list(r.udf_links) == SMALL_SITEMAP[r.url]
-
-
 def test_extract_attach_arrow_canonical_links(spark):
     """The crawl's extract pass: byte-identical text, and ``links`` =
     canonicalize(href, page url) per anchor, position-aligned with the

@@ -86,26 +86,38 @@ def test_seen_filter_preserves_trace(spark, tmp_path):
     assert filtered.cat.read("seen").count() > 0
 
 
-def test_seen_approx_mode_matches_exact_on_small_web(spark, tmp_path):
+def test_seen_approx_mode_matches_exact_on_small_web(spark, tmp_path,
+                                                     monkeypatch):
     """seen_mode='approx' drops bloom-hit discoveries WITHOUT the exact
     anti-join confirmation (the O(batch)-merge scale path). On a small
     web with an amply-sized bloom there are no false positives, so the
-    trace must equal the exact run's — and the merge must not read the
-    frontier index at all (use_bucketed_index=False works)."""
-    plain = _engine(spark, str(tmp_path / "pl"))
+    trace must equal the exact run's. The approximate merge never reads
+    the identity set, so even at the default use_bucketed_index=True
+    and an index gate of 0 (where an exact merge builds the index, see
+    tests/test_index_gate.py) it creates no frontier index files or
+    marker."""
+    import os
+
+    import pompspark.engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "INDEX_MIN_ROWS", 0)
+    plain = _engine(spark, str(tmp_path / "pl"), use_bucketed_index=False)
     plain.seed([SMALL_SEED])
     plain.run(max_rounds=100)
 
     approx = _engine(
         spark, str(tmp_path / "ap"),
         use_seen_filter=True, seen_shards=4, seen_capacity_per_shard=10_000,
-        seen_mode="approx", use_bucketed_index=False,
+        seen_mode="approx",
     )
     approx.seed([SMALL_SEED])
     approx.run(max_rounds=100)
 
     assert _trace_tuples(approx) == _trace_tuples(plain)
     assert approx.cat.read("seen").count() > 0
+    assert not approx.store.index_ready
+    assert not os.path.exists(str(tmp_path / "ap" / "frontier_index"))
+    assert not os.path.exists(str(tmp_path / "ap" / "frontier_index_version"))
 
 
 def test_seen_approx_requires_filter(spark, tmp_path):

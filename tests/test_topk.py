@@ -35,29 +35,40 @@ def test_topk_matches_order_by_limit(spark, ordering, k):
     assert got == want
 
 
-def test_engine_trace_identical_with_parallel_topk(spark, tmp_path):
-    """Forcing the parallel top-k path must not change the trace."""
+def test_engine_trace_identical_with_parallel_topk(spark, tmp_path, monkeypatch):
+    """Forcing the parallel top-k path must not change the trace. The
+    threshold is forced on ``frontier.dequeue``, the name the engine's
+    dequeue entry (frontier.dequeue_banded) calls, and the test checks
+    that the forced path actually ran."""
     from pompspark.engine import simulated_engine
     from pompspark.fixtures import SMALL_SEED, small_pages_df
     import pompspark.frontier as fr
 
-    def run(threshold):
-        import functools
+    orig_dequeue, orig_topk = fr.dequeue, fr.exact_ranked_topk
 
-        orig = fr.dequeue
+    def run(threshold):
+        topk_calls = []
+
+        def forced(*a, **kw):
+            kw["parallel_topk_threshold"] = threshold
+            return orig_dequeue(*a, **kw)
+
+        def counted(*a, **kw):
+            topk_calls.append(1)
+            return orig_topk(*a, **kw)
+
+        monkeypatch.setattr(fr, "dequeue", forced)
+        monkeypatch.setattr(fr, "exact_ranked_topk", counted)
         eng = simulated_engine(
             spark, str(tmp_path / f"t{threshold}"), small_pages_df(spark),
             ordering="bfs", per_round_budget=3, per_host_budget=2,
         )
-        # route through the requested threshold
-        import pompspark.engine as em
+        eng.seed([SMALL_SEED])
+        eng.run(max_rounds=50)
+        trace = [(r.round, r.seq, r.url) for r in eng.trace().collect()]
+        return trace, len(topk_calls)
 
-        em.dequeue = functools.partial(orig, parallel_topk_threshold=threshold)
-        try:
-            eng.seed([SMALL_SEED])
-            eng.run(max_rounds=50)
-        finally:
-            em.dequeue = orig
-        return [(r.round, r.seq, r.url) for r in eng.trace().collect()]
-
-    assert run(threshold=1) == run(threshold=10**9)
+    parallel, n_parallel = run(threshold=1)
+    ordered, n_ordered = run(threshold=10**9)
+    assert n_parallel > 0 and n_ordered == 0
+    assert parallel == ordered
