@@ -226,7 +226,7 @@ def q_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the expected output by construction."""
     from pompspark.canon import register_udfs
 
-    canon_udf, _, _ = register_udfs()
+    canon_udf, _ = register_udfs()
     f = _frontier(spark, sf_dir)
     messy = F.concat(
         F.lit("HTTP://"), F.upper(F.col("host")), F.lit(":80/p"),

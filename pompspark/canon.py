@@ -25,9 +25,13 @@ Where it runs:
   against the page url already in that batch; the round files' ``links``
   column holds the canonical children, so the link merge needs only
   the JVM ``host_col`` and no Python worker;
-- seeds, bulk seeds and ``resolve_discoveries`` (metarobots, the
-  declared queries) use ``canonicalize_udf`` — an Arrow-batched pandas
-  UDF (never a per-row Python UDF) behind a JVM fast-path gate.
+- list seeds (``CrawlEngine.seed``) call ``canonicalize``/``host_of``
+  on the driver, where the list already is;
+- bulk seeds (``CrawlEngine.seed_frontier``) and ``resolve_discoveries``
+  (metarobots, the declared queries) use ``canonical_col`` — a JVM
+  fast-path gate in front of an Arrow-batched pandas UDF (never a
+  per-row Python UDF) that sees only the slow minority — and the JVM
+  ``host_col``.
 
 Hashing: ``url_hash_col`` uses the JVM-side ``F.hash`` (murmur3_32)
 paired with ``F.xxhash64`` when 64 bits are needed for the seen-set at
@@ -174,13 +178,13 @@ def canonicalize_series(urls: pd.Series, bases: pd.Series | None = None) -> pd.S
     after the first normalization) take a vectorized regex fast path;
     only the remainder pays the per-string urllib cost."""
     if not urls.notna().any():
-        # all-null batch: the engine's JVM rlike gate nulled every
+        # all-null batch: canonical_col's JVM rlike gate nulled every
         # already-canonical href before the UDF call — on all-fast
         # link batches EVERY batch lands here, so skip the str.match
         # machinery entirely (r6; output identical: null in, null out)
         return pd.Series(None, index=urls.index, dtype=object)
     fast = urls.str.match(_CANONICAL_RE, na=False)
-    # nulls skip the per-string loop entirely: the engine's JVM-side
+    # nulls skip the per-string loop entirely: canonical_col's JVM
     # fast path nulls out already-canonical hrefs before the UDF call,
     # so most batch rows arrive null — looping over them would undo
     # the saving.
@@ -210,19 +214,12 @@ def host_of(url: str | None) -> str | None:
         return None
 
 
-def host_series(urls: pd.Series) -> pd.Series:
-    out = pd.Series(None, index=urls.index, dtype=object)
-    nn = urls.notna()
-    if nn.any():
-        out.loc[nn] = urls.loc[nn].map(host_of)
-    return out
-
-
 # ---------------------------------------------------------------- Spark side
 
 def host_col(url: str):
     """JVM twin of ``host_of`` for ``canonicalize()`` output (no Python
-    worker; the link merge's only host derivation). It mirrors
+    worker; the host of the link merge, ``seed_frontier`` and
+    ``resolve_discoveries``). It mirrors
     ``urlsplit(...).hostname``: the netloc after the last '@', then the
     text inside the first '[...]' or else the text before the first
     ':'; '' is NULL, and so is a netloc with an unpaired bracket, where
@@ -255,11 +252,39 @@ def register_udfs():
     def canonicalize_with_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
         return canonicalize_series(urls, bases)
 
-    @F.pandas_udf(T.StringType())
-    def host_udf(urls: pd.Series) -> pd.Series:
-        return host_series(urls)
+    return canonicalize_udf, canonicalize_with_base_udf
 
-    return canonicalize_udf, canonicalize_with_base_udf, host_udf
+
+def canonical_col(url_col: str, base_col: str | None = None):
+    """``canonicalize(url_col[, base_col])`` as a column: the one Spark
+    canonicalizer. Urls matching CANONICAL_PATTERN are provably
+    ``canonicalize()`` fixed points, so the rlike gate keeps them on the
+    JVM (whole-stage codegen) and the pandas UDF receives NULL for them
+    (canonicalize_series skips nulls) — Arrow ships only the slow
+    minority. Fast rows ship NULL for the base too: canonicalize_series
+    never reads the base of a null url, and nulling it keeps the
+    transfer at O(slow rows) (guide §4.1).
+
+    The UDF is marked non-deterministic (r6, guide §4.4): callers filter
+    on its output, and the optimizer duplicates a deterministic UDF
+    below each pushed filter (plans/r06/bench_links_merge_before.txt
+    shows every row paying the UDF twice). It is a pure function —
+    results are unchanged — and the plan keeps one evaluation."""
+    from pyspark.sql import functions as F
+
+    canon_udf, canon_base_udf = register_udfs()
+    is_fast = F.col(url_col).rlike(CANONICAL_PATTERN)
+
+    def slow(c: str):
+        return F.when(~is_fast, F.col(c))
+
+    if base_col is None:
+        slow_canon = canon_udf.asNondeterministic()(slow(url_col))
+    else:
+        slow_canon = canon_base_udf.asNondeterministic()(
+            slow(url_col), slow(base_col)
+        )
+    return F.coalesce(F.when(is_fast, F.col(url_col)), slow_canon)
 
 
 def resolve_discoveries(src, href_col: str = "href", base_col: str = "url"):
@@ -271,60 +296,15 @@ def resolve_discoveries(src, href_col: str = "href", base_col: str = "url"):
     the crawl engine's anchor links and 3xx Locations are resolved by
     ``canonical_child`` in that pass, to the same children.
 
-    Plan shape: hrefs matching CANONICAL_PATTERN are provably
-    canonicalize() fixed points — the rlike gate + regexp_extract run
-    in whole-stage codegen and the pandas UDF receives NULL for them
-    (canonicalize_series skips nulls), so Arrow ships only the slow
-    minority. On real crawl batches the fast fraction dominates after
-    the first normalization pass.
-    """
+    Plan shape: one ArrowEvalPython node, the canonicalizer behind its
+    rlike gate (``canonical_col``); the host is the JVM ``host_col``."""
     from pyspark.sql import functions as F
 
-    _, canon_base_udf, host_udf = register_udfs()
-    # r6 (guide §4.4): the callers filter on these UDFs' outputs
-    # (child/child_host isNotNull), and the optimizer duplicates a
-    # deterministic UDF below each pushed filter — the before-plan
-    # (plans/r06/bench_links_merge_before.txt) shows FOUR
-    # ArrowEvalPython nodes over the exploded link stream, i.e. every
-    # row paid both UDFs twice. Marking them non-deterministic forbids
-    # the duplication (they are pure functions — results unchanged)
-    # and the plan drops to one evaluation of each.
-    canon_base_udf = canon_base_udf.asNondeterministic()
-    host_udf = host_udf.asNondeterministic()
-    is_fast = F.col(href_col).rlike(CANONICAL_PATTERN)
-    slow_href = F.when(is_fast, F.lit(None).cast("string")).otherwise(
-        F.col(href_col)
-    )
-    # fast rows ship NULL for the base too: canonicalize_series never
-    # reads the base of a null href, and nulling it keeps the Arrow
-    # transfer to the Python worker at O(slow rows) instead of shipping
-    # every parent url of the (dominant) fast majority (guide §4.1:
-    # pass only the columns/bytes the function needs).
-    slow_base = F.when(is_fast, F.lit(None).cast("string")).otherwise(
-        F.col(base_col)
-    )
-    child = F.coalesce(
-        F.when(is_fast, F.col(href_col)),
-        canon_base_udf(slow_href, slow_base),
-    )
     return (
-        src.withColumn("__fast", is_fast)
-        .withColumn("child", child)
+        src.withColumn("child", canonical_col(href_col, base_col))
         .filter(F.col("child").isNotNull())
-        .withColumn(
-            "child_host",
-            F.when(
-                F.col("__fast"),
-                F.regexp_extract("child", r"^https?://([^/]+)", 1),
-            ).otherwise(
-                host_udf(
-                    F.when(F.col("__fast"), F.lit(None).cast("string"))
-                    .otherwise(F.col("child"))
-                )
-            ),
-        )
+        .withColumn("child_host", host_col("child"))
         .filter(F.col("child_host").isNotNull())
-        .drop("__fast")
     )
 
 

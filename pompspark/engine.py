@@ -29,21 +29,25 @@ from __future__ import annotations
 import time
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pompspark import schemas
-from pompspark.canon import register_udfs
+from pompspark.canon import canonical_col, canonicalize, host_col, host_of
 from pompspark.fetch import SimulatedFetcher
 import pompspark.frontier as frontier_mod
 from pompspark.frontier import (
     FRONTIER_COLS,
     S_RANK,
     S_ROUND,
+    SEED_PRIORITY,
     FrontierStore,
+    _anti_join_existing,
+    _identity_cols,
+    _state_col,
     new_frontier_rows,
-    normalize_seeds,
 )
+from pompspark.robots import with_robots
 from pompspark.tables import Catalog
 
 Transform = Callable[[DataFrame], DataFrame]
@@ -151,8 +155,6 @@ def round_discoveries(round_df: DataFrame) -> DataFrame:
     depth+1 per hop — redirect chains consume depth like link chains,
     so trap/depth rules bound them and the frontier anti-join (O2)
     terminates redirect cycles."""
-    from pompspark.canon import host_col
-
     is_redir = F.col("status").between(300, 399) & F.col("location").isNotNull()
     return (
         round_df.filter((F.col("status") == 200) | is_redir)
@@ -351,14 +353,31 @@ class CrawlEngine:
         self._compact_thread = t
 
     def seed(self, seeds: list) -> int:
-        self._join_compact()
-        rows = normalize_seeds(self.spark, seeds, self.robots_df, round_=0,
-                               robots_rows=self.robots_rows)
-        rows = self._transform_frontier(rows)
-        _n, seeded = self.store.append_delta(rows)
-        self._frontier_rows += _n
-        self._track_identity(seeded)
-        self._checkpoint(budget_left=0)
+        """List seeding — pomp's ENTRY_REQUESTS, consumed at pump start
+        (pomp/core/base.py BaseCrawler.ENTRY_REQUESTS -> Pomp.prepare).
+        ``seeds``: list[str | (url, priority)]. The list is already on
+        the driver, so it is canonicalized there (``canonicalize`` +
+        ``host_of``, first occurrence wins, as tests/oracle_sim.py's
+        OracleCrawl.seed) and enters the admission tail seed_frontier()
+        uses: a url already in the frontier is not enqueued again.
+        ``seq`` continues from the frontier's row count in list order
+        (0..n-1 on an empty frontier), so every seed of a later call
+        sorts after the earlier ones. Returns the frontier version."""
+        cands: dict[str, tuple] = {}
+        for s in seeds:
+            url, pri = (s, SEED_PRIORITY) if isinstance(s, str) else s
+            url = canonicalize(url)
+            host = host_of(url)
+            if host is not None and url not in cands:
+                cands[url] = (url, host, float(pri), len(cands))
+        df = self.spark.createDataFrame(
+            list(cands.values()),
+            "url string, host string, priority double, idx int",
+        )
+        # rank among the ADMITTED seeds: an anti-joined url leaves no gap
+        rank = F.row_number().over(Window.orderBy("idx")) - 1
+        seq = F.lit(self._frontier_rows).cast("long") + rank
+        self._admit(df, seq, discovered_round=0)
         return self.cat.current_version("frontier")
 
     def seed_frontier(self, urls: DataFrame, priority: float | None = None,
@@ -368,70 +387,56 @@ class CrawlEngine:
         locs, which must never pass through a driver-side list the way
         seed() seeds do).
 
-        Same canonicalization as seed() (JVM rlike gate, the pandas
-        UDF sees only the non-canonical minority), exact
-        anti-join against the frontier identity set (``_identity_set``),
-        robots gating,
-        and the frontier_transform hook. ``seq`` is xxhash64(url):
-        bulk seeds have no meaningful list order, so within the seed
-        priority class the dequeue order is deterministic HASH order
-        (an xxhash64 tie would make the tied pair's relative order
-        partition-dependent; at 10^8 seeds expect ~0.0003 ties).
-        Returns the number of rows actually enqueued.
+        Canonicalized by ``canon.canonical_col`` (JVM rlike gate, the
+        pandas UDF sees only the non-canonical minority), hosts from the
+        JVM ``canon.host_col``; then seed()'s admission tail (identity
+        anti-join, robots gating, the frontier_transform hook). ``seq``
+        is xxhash64(url): bulk seeds have no meaningful list order, so
+        within the seed priority class the dequeue order is
+        deterministic HASH order (an xxhash64 tie would make the tied
+        pair's relative order partition-dependent; at 10^8 seeds expect
+        ~0.0003 ties). Returns the number of rows actually enqueued.
         """
-        from pompspark.canon import CANONICAL_PATTERN
-        from pompspark.frontier import (
-            SEED_PRIORITY,
-            _anti_join_existing,
-            _identity_cols,
-            _state_col,
-        )
-        from pompspark.robots import with_robots
-
         pri = SEED_PRIORITY if priority is None else float(priority)
-        self._join_compact()
-        canon_udf, _, host_udf = register_udfs()
-        # stop the optimizer duplicating the UDFs below the pushed
-        # isNotNull filters (guide §4.4; same fix as resolve_discoveries)
-        canon_udf = canon_udf.asNondeterministic()
-        host_udf = host_udf.asNondeterministic()
-        is_fast = F.col(url_col).rlike(CANONICAL_PATTERN)
-        slow = F.when(is_fast, F.lit(None).cast("string")).otherwise(F.col(url_col))
-        canon = F.coalesce(F.when(is_fast, F.col(url_col)), canon_udf(slow))
-        d = (
-            urls.select(canon.alias("url"), is_fast.alias("__fast"))
+        df = (
+            urls.select(canonical_col(url_col).alias("url"))
             .filter(F.col("url").isNotNull())
-            .select(
-                "url",
-                F.when(
-                    F.col("__fast"),
-                    F.regexp_extract("url", r"^https?://([^/]+)", 1),
-                ).otherwise(
-                    host_udf(
-                        F.when(F.col("__fast"), F.lit(None).cast("string"))
-                        .otherwise(F.col("url"))
-                    )
-                ).alias("host"),
-            )
+            .select("url", host_col("url").alias("host"),
+                    F.lit(pri).alias("priority"))
             .filter(F.col("host").isNotNull())
             .dropDuplicates(["url"])
-            .withColumn("url_hash", F.xxhash64("url"))
         )
-        fresh = _anti_join_existing(d, self._identity_set())
+        return self._admit(df, F.xxhash64("url"), discovered_round=self.round)
+
+    def _admit(self, cands: DataFrame, seq, discovered_round: int) -> int:
+        """The one seed-admission tail (pomp: entry requests and
+        extracted requests share ``BaseQueue.put_requests``).
+        ``cands``: distinct canonical (url, host, priority) rows; ``seq``
+        is evaluated over the rows that survive the anti-join. Anti-join
+        against the frontier identity set (``_identity_set``), robots
+        gating, FRONTIER rows at depth 0, the frontier_transform hook,
+        the append, the identity upkeep and a checkpoint. Returns the
+        number of rows enqueued."""
+        self._join_compact()
+        fresh = _anti_join_existing(
+            cands.withColumn("url_hash", F.xxhash64("url")),
+            self._identity_set(),
+        )
         fresh = with_robots(fresh, self.robots_df, robots_rows=self.robots_rows)
+        ident = _identity_cols(F.col("url"))
         rows = fresh.select(
-            "url", *_identity_cols(F.col("url"))[:2], "host",
+            "url", *ident[:2], "host",
             F.lit(0).cast("int").alias("depth"),
-            F.lit(pri).cast("double").alias("priority"),
-            F.lit(self.round).cast("int").alias("discovered_round"),
-            F.xxhash64("url").alias("seq"),
-            _identity_cols(F.col("url"))[2],
+            F.col("priority").cast("double").alias("priority"),
+            F.lit(discovered_round).cast("int").alias("discovered_round"),
+            seq.cast("long").alias("seq"),
+            ident[2],
             _state_col(self.robots_df).alias("state"),
-        ).select(*FRONTIER_COLS)
+        )
         rows = self._transform_frontier(rows)
-        n_new, seeded = self.store.append_delta(rows)
+        n_new, added = self.store.append_delta(rows)
         self._frontier_rows += n_new
-        self._track_identity(seeded)
+        self._track_identity(added)
         self._checkpoint(budget_left=0)
         return n_new
 
@@ -530,13 +535,16 @@ class CrawlEngine:
         while budget > 0 and (max_rounds is None or self.round < max_rounds):
             fetched = self.run_round(min(budget, self.per_round_budget))
             if fetched == 0:
-                if self.max_retries and self._has_pending_retries():
+                pending = (
+                    self.store.pending_retry_delay() if self.max_retries
+                    else None
+                )
+                if pending is not None:
                     idle += 1
                     # per-url Retry-After cool-downs can exceed the
                     # global default — bound idling by the LONGEST
                     # pending cool-down, not just retry_delay_rounds
-                    if idle > max(self.retry_delay_rounds,
-                                  self._max_pending_retry_delay()):
+                    if idle > max(self.retry_delay_rounds, pending):
                         # every pending retry's cool-down elapsed during
                         # the idle run and a fully-eligible round STILL
                         # fetched nothing — the retries are permanently
@@ -557,25 +565,6 @@ class CrawlEngine:
             budget -= fetched
         self._join_compact()
         return self.cat.read("trace")
-
-    def _has_pending_retries(self) -> bool:
-        t = self.cat.read("frontier_state")
-        latest = t.groupBy("url_hash", "url").agg(
-            F.max_by("state", "round").alias("s")
-        )
-        return bool(latest.filter(F.col("s") == "retry").limit(1).count())
-
-    def _max_pending_retry_delay(self) -> int:
-        """Longest per-url Retry-After cool-down (rounds) among urls
-        whose LATEST state is retry; 0 if none carry one. Only called
-        on the rare all-idle path — one aggregate over the (small,
-        between-compactions) transition table."""
-        t = self.cat.read("frontier_state")
-        row = t.groupBy("url_hash", "url").agg(
-            F.max_by("state", "round").alias("s"),
-            F.max_by("retry_delay", "round").alias("d"),
-        ).filter(F.col("s") == "retry").agg(F.max("d").alias("m")).head()
-        return int(row.m or 0)
 
     def run_round(self, round_budget: int | None = None) -> int:
         """One round: dequeue -> fetch/extract -> sinks -> merge.
@@ -681,7 +670,6 @@ class CrawlEngine:
             # skips this (no wall clock in tests/bench). ``batch`` keeps
             # naming the persisted frame (unpersisted below).
             from pompspark.politeness import schedule_slots
-            from pompspark.robots import with_robots
 
             fetch_in = schedule_slots(
                 with_robots(batch, self.robots_df,

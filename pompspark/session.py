@@ -85,10 +85,10 @@ def build_spark(
             str(n_shuffle),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        # r6: parquet default flipped snappy -> zstd (guide §6; env
-        # knob for A/B). The engine's round files are written AND
-        # fsynced inside the timed window, so output bytes are wall
-        # time. Measured on this host, one 120k-row round dir: zstd
+        # r6: parquet default flipped snappy -> zstd (guide §6). The
+        # engine's round files are written AND fsynced inside the
+        # timed window, so output bytes are wall time. Measured on a
+        # 32-core host, one 120k-row round dir: zstd
         # wrote FASTER (1.33 s vs 2.36 s — the repeated-body text
         # compresses 233 MB -> 36 MB, and writing 6.5x fewer bytes
         # beats the extra compress CPU) and the column-pruned
@@ -98,7 +98,7 @@ def build_spark(
         # fewer bytes through NIC/disk at equal-or-less wall time.
         .config(
             "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
+            "zstd",
         )
         # r6: vectorized-reader batch rows 4096 -> 512 (guide §6,
         # measured on this host): the default pre-sizes every column
@@ -109,10 +109,10 @@ def build_spark(
         # (frontier, ~100 B rows) measured faster (0.25 -> 0.16 s
         # warm). 512 rows x 30 KB ≈ 15 MB per batch keeps fat-row
         # scans allocation-light while staying large enough for
-        # vectorization on narrow rows. Env-overridable.
+        # vectorization on narrow rows.
         .config(
             "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_PARQUET_BATCH_ROWS", "512"),
+            "512",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python-worker crash forensics: without these a dead worker

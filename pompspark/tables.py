@@ -159,9 +159,6 @@ class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # Durable commits: fsync data files as part of commit (see
-        # _fsync_dir_files). Off-switch for experiments only.
-        self.fsync_commits = os.environ.get("POMPSPARK_FSYNC", "1") == "1"
         os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------------ paths
@@ -253,8 +250,7 @@ class Catalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        if self.fsync_commits:
-            _fsync_dir_files(path)
+        _fsync_dir_files(path)
         return rel
 
     @staticmethod
@@ -305,8 +301,7 @@ class Catalog:
 
             shutil.rmtree(path)
         writer(path)
-        if self.fsync_commits:
-            _fsync_dir_files(path)
+        _fsync_dir_files(path)
         self._commit(table, {
             "version": v, "dirs": prev["dirs"] + [rel], "op": "append",
             "schema": prev["schema"], "partition_by": None,
@@ -337,8 +332,7 @@ class Catalog:
         path = os.path.join(self._tdir(table), rel)
         os.makedirs(path, exist_ok=True)
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-        if self.fsync_commits:
-            _fsync_dir_files(path, workers=1)
+        _fsync_dir_files(path, workers=1)
         return self._commit(table, {
             "version": v, "dirs": prev["dirs"] + [rel], "op": "append",
             "schema": prev["schema"], "partition_by": None,

@@ -97,19 +97,21 @@ def test_trailing_line_terminator_is_stripped(spark, end):
 def test_canonicalize_udf(spark):
     from pyspark.sql import functions as F
 
-    from pompspark.canon import register_udfs, url_hash_col
+    from pompspark.canon import host_col, register_udfs, url_hash_col
 
-    canon_udf, canon_base_udf, host_udf = register_udfs()
+    canon_udf, _canon_base_udf = register_udfs()
     df = spark.createDataFrame(
         [("HTTP://A.Example:80/p?b=2&a=1#f",), ("javascript:void(0)",)], ["url"]
     )
-    out = df.select(
-        canon_udf("url").alias("c"),
-        host_udf(canon_udf("url")).alias("h"),
-    ).collect()
+    out = (
+        df.select(canon_udf("url").alias("c"))
+        .select("c", host_col("c").alias("h"))
+        .collect()
+    )
     assert out[0].c == "http://a.example/p?a=1&b=2"
     assert out[0].h == "a.example"
     assert out[1].c is None
+    assert out[1].h is None
 
     hashed = df.limit(1).select(url_hash_col(F.col("url"))).collect()
     assert isinstance(hashed[0].url_hash, int)

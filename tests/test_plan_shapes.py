@@ -289,3 +289,27 @@ def test_link_merge_runs_without_python(spark, tmp_path):
     assert len(plans) == 1
     assert "EvalPython" not in plans[0], plans[0]
     assert eng.cat.row_count("frontier") == 4  # seed + its 3 children
+
+
+def test_resolve_discoveries_one_python_node(spark):
+    """``resolve_discoveries`` runs one Python UDF, the canonicalizer
+    behind its rlike gate: the host is the JVM ``host_col``, so the
+    plan holds exactly one ArrowEvalPython node — and its rows are the
+    canonical children with their hosts."""
+    from pompspark.canon import resolve_discoveries
+
+    src = spark.createDataFrame(
+        [("http://a.example/p0", "http://a.example/p1"),
+         ("http://a.example/p0", "../Q?b=2&a=1#f"),
+         ("http://a.example/p0", "mailto:x@y")],
+        "url string, href string",
+    )
+    out = resolve_discoveries(src)
+    plan = _plan(out)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan, plan
+    got = sorted((r.child, r.child_host) for r in out.collect())
+    assert got == [
+        ("http://a.example/Q?a=1&b=2", "a.example"),
+        ("http://a.example/p1", "a.example"),
+    ]

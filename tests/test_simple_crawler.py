@@ -102,6 +102,53 @@ def test_multi_seed_and_404(spark, tmp_path):
     assert log[SMALL_SEED].status == 200
 
 
+_A0, _B0, _C0 = ("http://a.example/p0", "http://b.example/p0",
+                 "http://c.example/p0")
+REPEATED_SEED_CALLS = {
+    # a url already in the frontier is not enqueued again
+    "same-url": [[_A0], [_A0]],
+    # a later call's seeds sort after every earlier call's
+    "later-call": [["http://c.example/p3", "http://b.example/p2"], [_A0]],
+    # the anti-joined a/p0 leaves a rank gap in the second call: seq is
+    # the rank among ADMITTED seeds, so b/p0 and c/p0 do not collide
+    "rank-gap": [[_A0], [_A0, _B0], [_C0]],
+}
+
+
+@pytest.mark.parametrize("ordering", ["bfs", "dfs"])
+@pytest.mark.parametrize("case", sorted(REPEATED_SEED_CALLS))
+def test_repeated_seed_calls_match_oracle(spark, tmp_path, case, ordering):
+    """Several seed() calls admit like the oracle's: urls already in
+    the frontier are skipped and each call's seq continues after the
+    earlier calls' (pomp: entry requests take the same queue put as
+    extracted ones)."""
+    from pyspark.sql import functions as F
+
+    from pompspark.frontier import S_RANK, S_ROUND
+
+    eng = simulated_engine(
+        spark, str(tmp_path / "e"), small_pages_df(spark),
+        ordering=ordering, per_round_budget=5, per_host_budget=2,
+    )
+    sim = OracleCrawl(sitemap=SMALL_SITEMAP, ordering=ordering,
+                      per_round_budget=5, per_host_budget=2)
+    for call in REPEATED_SEED_CALLS[case]:
+        eng.seed(call)
+        sim.seed(call)
+    seeded = {
+        r.url: r.seq
+        for r in eng.store.all_rows().filter(F.col("depth") == 0).collect()
+    }
+    assert seeded == {u: e.seq for u, e in sim.entries.items()}
+    eng.run(max_rounds=100)
+    sim.run()
+    got = [
+        (r.round, (int(r.seq) % S_ROUND) // S_RANK, r.url, r.depth, r.host)
+        for r in eng.trace().collect()
+    ]
+    assert got == sim.trace_tuples()
+
+
 def test_byte_identity_against_pages_text(spark, tmp_path):
     """Engine-extracted text must equal the pages.text ground truth
     (which FIXTURES F1 defines as ref_extract output) byte-for-byte."""
