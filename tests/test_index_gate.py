@@ -73,10 +73,11 @@ def test_trace_equivalence_across_index_gate(spark, tmp_path, monkeypatch, gate)
     sim.seed(seeds)
     sim.run()
     assert got == sim.trace_tuples()
-    # built exactly once, by the first merge at or past the gate: on
-    # the 2 seeded rows at gate 0, mid-crawl at gate 40
+    # built exactly once, by the first identity read at or past the
+    # gate: seed()'s anti-join on the empty frontier at gate 0,
+    # mid-crawl at gate 40
     assert len(built) == 1 and eng.store.index_ready
-    assert built[0] == 2 if gate == 0 else built[0] >= gate
+    assert built[0] == 0 if gate == 0 else built[0] >= gate
     idx = sorted(r.url for r in eng.store.identity_rows().collect())
     assert idx == sorted(r.url for r in eng.cat.read("frontier").collect())
 
