@@ -858,21 +858,24 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_meta_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-level robots directives (metarobots.meta_robots_flags):
-    five html shapes synthesized in-query per doc_id%5 (noindex /
-    nofollow / none / index,follow / no tag), flags extracted by the
-    lenient-cast + regexp JVM path over BINARY payloads; DuckDB twin
+    six html shapes synthesized in-query per doc_id%6 (noindex /
+    nofollow / none / index,follow / noindex after max-snippet:-1 /
+    no tag), flags extracted by the lenient-cast + regexp JVM path
+    over BINARY payloads; DuckDB twin
     runs the same patterns on the string. Garbage-byte tolerance is
     pinned by tests/test_metarobots.py (binary is synthesized from
     text here so both engines see identical bytes)."""
     from pompspark.metarobots import meta_robots_flags
 
     d = _documents(spark, sf_dir)
-    m = F.col("doc_id") % 5
+    m = F.col("doc_id") % 6
     tag = (
         F.when(m == 0, F.lit('<meta name="robots" content="noindex">'))
         .when(m == 1, F.lit("<meta name='robots' content='nofollow'>"))
         .when(m == 2, F.lit("<meta name=ROBOTS content=none>"))
         .when(m == 3, F.lit('<meta name=robots content="index, follow">'))
+        .when(m == 4, F.lit(
+            '<meta name="robots" content="max-snippet:-1, noindex">'))
         .otherwise(F.lit(""))
     )
     html = F.encode(
@@ -2209,11 +2212,12 @@ def _oracle_sql_literal() -> dict[str, str]:
             WITH h AS (
               SELECT doc_id,
                 lower('<html><head>' ||
-                  CASE CAST(doc_id % 5 AS INT)
+                  CASE CAST(doc_id % 6 AS INT)
                     WHEN 0 THEN '<meta name="robots" content="noindex">'
                     WHEN 1 THEN '<meta name=''robots'' content=''nofollow''>'
                     WHEN 2 THEN '<meta name=ROBOTS content=none>'
                     WHEN 3 THEN '<meta name=robots content="index, follow">'
+                    WHEN 4 THEN '<meta name="robots" content="max-snippet:-1, noindex">'
                     ELSE ''
                   END
                   || '</head><body>' || substring(text, 1, 40)
@@ -2223,13 +2227,13 @@ def _oracle_sql_literal() -> dict[str, str]:
             c AS (
               SELECT doc_id,
                 CASE WHEN regexp_extract(s,
-                  '<meta[^>]*name\s*=\s*["'']?robots["'']?[^>]*content\s*=\s*["'']?([a-z,\- ]*)',
+                  '<meta[^>]*name\s*=\s*["'']?robots["'']?[^>]*content\s*=\s*["'']?([^"''>]*)',
                   1) != ''
                 THEN regexp_extract(s,
-                  '<meta[^>]*name\s*=\s*["'']?robots["'']?[^>]*content\s*=\s*["'']?([a-z,\- ]*)',
+                  '<meta[^>]*name\s*=\s*["'']?robots["'']?[^>]*content\s*=\s*["'']?([^"''>]*)',
                   1)
                 ELSE regexp_extract(s,
-                  '<meta[^>]*content\s*=\s*["'']?([a-z,\- ]*)["'']?[^>]*name\s*=\s*["'']?robots["'']?',
+                  '<meta[^>]*content\s*=\s*["'']?([^"''>]*)["'']?[^>]*name\s*=\s*["'']?robots["'']?',
                   1)
                 END AS content
               FROM h

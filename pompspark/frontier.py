@@ -147,15 +147,16 @@ def exact_ranked_topk(df: DataFrame, keys, k: int, partitions: int | None = None
     return result
 
 
-def materialize_batch(batch: DataFrame) -> int:
-    """Persist-fill + count a dequeue batch while VALIDATING the rank
-    assignment: n rows must carry ranks 0..n-1 (max == n-1) and match
-    the parallel top-k's expected count. A cached-sort recompute (cache
-    eviction, executor loss) breaks those invariants in practice —
-    raising beats silently fetching in the wrong order (r2 advice).
-    One Spark action, same cache-fill role as the old .count()."""
+def _materialize(batch: DataFrame, *extra):
+    """The one Spark action behind a dequeue batch: persist-fill, count
+    and VALIDATE the rank assignment — n rows must carry ranks 0..n-1
+    (max == n-1) and match the parallel top-k's expected count. A
+    cached-sort recompute (cache eviction, executor loss) breaks those
+    invariants in practice — raising beats silently fetching in the
+    wrong order (r2 advice). ``extra``: further aggregates over the
+    batch, computed by the same action. Returns the aggregate row."""
     row = batch.agg(
-        F.count("*").alias("n"), F.max("fetch_rank").alias("m")
+        F.count("*").alias("n"), F.max("fetch_rank").alias("m"), *extra
     ).first()
     n = int(row["n"])
     exp = getattr(batch, "_topk_expected", None)
@@ -164,7 +165,14 @@ def materialize_batch(batch: DataFrame) -> int:
             f"dequeue rank validation failed: n={n}, max_rank={row['m']}, "
             f"expected={exp} — cached top-k sort was likely recomputed"
         )
-    return n
+    return row
+
+
+def materialize_batch(batch: DataFrame) -> int:
+    """Persist-fill, count and validate a dequeue batch (``_materialize``);
+    returns its row count. One Spark action, same cache-fill role as the
+    old .count()."""
+    return int(_materialize(batch)["n"])
 
 
 # Queued-row count below which the level-1 (host, salt) pre-rank is
@@ -268,16 +276,19 @@ def dequeue(
 BAND_COL = {"bfs": "depth", "dfs": "discovered_round"}
 
 
-def _dequeue_persisted(queued: DataFrame, **kw) -> tuple[DataFrame, int]:
-    """``dequeue`` -> persisted, validated batch and its row count;
-    the parallel top-k's internal sort cache is released once the
-    batch's own cache backs every downstream read."""
+def _dequeue_persisted(queued: DataFrame, band_key=None, **kw):
+    """``dequeue`` -> (persisted, validated batch, its row count, the
+    max of ``band_key`` over the batch or None). The max rides on the
+    batch's one materializing action. The parallel top-k's internal
+    sort cache is released once the batch's own cache backs every
+    downstream read."""
     batch = dequeue(queued, **kw).persist()
-    n = materialize_batch(batch)
+    extra = [] if band_key is None else [F.max(band_key).alias("worst")]
+    row = _materialize(batch, *extra)
     cache = getattr(batch, "_topk_cache", None)
     if cache is not None:
         cache.unpersist()
-    return batch, n
+    return batch, int(row["n"]), None if band_key is None else row["worst"]
 
 
 def dequeue_banded(
@@ -307,24 +318,30 @@ def dequeue_banded(
     EXACTNESS: bands are ordered by a strict prefix of the sort key
     ((priority desc, depth asc) for BFS; (priority desc,
     discovered_round desc) for DFS — within one priority, seq blocks
-    are monotone in discovered_round). The loop stops only when BOTH
-    hold:
+    are monotone in discovered_round). Write key(p, b) for that prefix
+    as an ascending tuple: (-p, b) for BFS, (-p, -b) for DFS. The loop
+    stops only when BOTH hold:
       (a) |selection| == budget (the politeness-capped candidate pool
           already covers the budget), and
-      (b) every selected row's (priority, band) ranks STRICTLY before
-          the first unread band — necessary because the un-banded
-          recent dirs (appends since the last compaction, always read
-          in full) contribute rows from arbitrary bands: a selected
-          deep row from an append does NOT prove the unread shallower-
-          than-it banded rows are covered, so the prefix is extended
-          through the deepest selected band and re-run.
+      (b) key(worst) < key(first unread band), where worst is the
+          largest key among the selected rows — necessary because the
+          un-banded recent dirs (appends since the last compaction,
+          always read in full) contribute rows from arbitrary bands,
+          including bands no compacted file holds: a selected deep row
+          from an append does NOT prove the unread shallower-than-it
+          banded rows are covered, so the prefix is extended through
+          every band whose key is <= key(worst) and re-run.
     Under (a)+(b) every unread banded row ranks behind every selected
     row, and adding worse rows can neither enter a host's top-cap
     ahead of existing rows nor displace any of the global top-budget —
     so the selection equals the full-frontier selection (pinned by the
-    banded trace-equivalence grid). At a 10^10-row frontier with a
-    10^7 budget this reads the active crawl band(s), not the whole
-    table, each round."""
+    banded trace-equivalence grid). key(worst) is one more aggregate of
+    the action that fills and validates the batch, so a round whose
+    first prefix fills the budget is one pass and one Spark action.
+    At a 10^10-row frontier with a 10^7 budget this reads the active
+    crawl band(s), not the whole table, each round."""
+    import bisect
+
     dq_kw = dict(
         robots_df=robots_df, ordering=ordering,
         per_round_budget=per_round_budget, per_host_budget=per_host_budget,
@@ -336,25 +353,21 @@ def dequeue_banded(
     want_col = BAND_COL[ordering]
     if info is None or info["band_col"] != want_col:
         # no valid banded layout for this ordering: full scan
-        return (*_dequeue_persisted(
+        batch, n, _ = _dequeue_persisted(
             store.queued(current_round, retry_delay_rounds, retry_enabled),
             **dq_kw,
-        ), -1)
+        )
+        return batch, n, -1
 
     band_col = info["band_col"]
     pairs = []
     for p_str, bands in info["bands"].items():
         for b in bands:
             pairs.append((float(p_str), int(b)))
-    desc_band = ordering == "dfs"
-    keyf = (lambda pb: (-pb[0], -pb[1])) if desc_band else (lambda pb: (-pb[0], pb[1]))
-    pairs.sort(key=keyf)
-
-    def rank_of(p: float, b: int) -> int:
-        """# of bands strictly before (p, b) in key order — works for
-        (p, b) values that only exist in un-banded appends too."""
-        k = keyf((p, b))
-        return sum(1 for pb in pairs if keyf(pb) < k)
+    sign = -1 if ordering == "dfs" else 1
+    pairs.sort(key=lambda pb: (-pb[0], sign * pb[1]))
+    keys = [(-p, sign * b) for p, b in pairs]
+    band_key = F.struct(-F.col("priority"), F.lit(sign) * F.col(band_col))
 
     i = 0  # bands [0, i) are in the read prefix
     while True:
@@ -372,21 +385,19 @@ def dequeue_banded(
         eligible = store.queued(
             current_round, retry_delay_rounds, retry_enabled, source=src
         )
-        batch, n = _dequeue_persisted(eligible, **dq_kw)
+        batch, n, worst = _dequeue_persisted(
+            eligible, band_key=None if exhausted else band_key, **dq_kw
+        )
         if exhausted:
             return batch, n, i
         if n >= per_round_budget:
-            # coverage check (b): the deepest selected band must rank
-            # strictly before the first unread band, else extend the
-            # prefix through it and re-run.
-            sel_bands = batch.select("priority", band_col).distinct().collect()
-            worst = max(rank_of(float(r[0]), int(r[1])) for r in sel_bands)
-            if worst < i:
+            # coverage check (b)
+            if worst < keys[i]:
                 return batch, n, i
             batch.unpersist()
-            # extend the prefix through the deepest selected band: the
-            # loop head grows to >= i+1, so aim it at worst (+1 there).
-            i = worst
+            # extend the prefix through every band keyed <= worst: j
+            # bands key below it, and the loop head grows i past j.
+            i = bisect.bisect_left(keys, worst)
             continue
         batch.unpersist()
 

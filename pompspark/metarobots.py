@@ -31,13 +31,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# content attr of a robots meta tag, either attribute order
+# content attr of a robots meta tag, either attribute order. The value
+# runs to its closing quote (or the tag end when unquoted): directives
+# such as ``max-snippet:-1`` carry ':' and digits, and a narrower class
+# would stop there and miss a ``noindex`` after them (fail-open).
 _META_FWD = (
     r"<meta[^>]*name\s*=\s*[\"']?robots[\"']?[^>]*"
-    r"content\s*=\s*[\"']?([a-z,\- ]*)"
+    r"content\s*=\s*[\"']?([^\"'>]*)"
 )
 _META_REV = (
-    r"<meta[^>]*content\s*=\s*[\"']?([a-z,\- ]*)[\"']?[^>]*"
+    r"<meta[^>]*content\s*=\s*[\"']?([^\"'>]*)[\"']?[^>]*"
     r"name\s*=\s*[\"']?robots[\"']?"
 )
 

@@ -129,20 +129,23 @@ def _fsync_dir_files(path: str, workers: int = 8) -> None:
         dirs.extend(os.path.join(root_, d) for d in dnames)
         files.extend(os.path.join(root_, f) for f in fnames)
 
-    def _sync(p: str) -> None:
-        try:
-            fd = os.open(p, os.O_RDONLY)
-        except OSError:
-            return
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-
     with ThreadPoolExecutor(max_workers=workers) as ex:
-        list(ex.map(_sync, files))
+        list(ex.map(_fsync_path, files))
     for d in dirs:
-        _sync(d)
+        _fsync_path(d)
+
+
+def _fsync_path(p: str) -> None:
+    """fsync one file or directory (a directory fsync makes its entries
+    — creates, renames — durable); a path that is gone is skipped."""
+    try:
+        fd = os.open(p, os.O_RDONLY)
+    except OSError:
+        return
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 class Catalog:
@@ -184,21 +187,34 @@ class Catalog:
             return json.load(f)
 
     def _commit(self, table: str, snap: dict[str, Any]) -> int:
-        """Write the manifest, then atomically flip _latest. A crash
-        before the flip leaves the previous snapshot current (data dirs
-        without a manifest pointer are simply unreferenced)."""
-        tdir = self._tdir(table)
-        os.makedirs(os.path.join(tdir, "snapshots"), exist_ok=True)
+        """Write the manifest durably, then atomically flip _latest. A
+        crash before the flip leaves the previous snapshot current (data
+        dirs without a manifest pointer are simply unreferenced). The
+        manifest and its directory entry are fsynced BEFORE the flip, so
+        a power loss can never leave _latest naming a truncated or
+        missing manifest."""
+        snaps = os.path.join(self._tdir(table), "snapshots")
+        os.makedirs(snaps, exist_ok=True)
         v = snap["version"]
         with open(self._snap_path(table, v), "w") as f:
             json.dump(snap, f)
+            f.flush()
+            os.fsync(f.fileno())
+        _fsync_path(snaps)
+        self._flip_latest(table, v)
+        return v
+
+    def _flip_latest(self, table: str, v: int) -> None:
+        """Point _latest at snapshot ``v``: fsynced temp file, atomic
+        rename, then a fsync of the table dir so the rename itself
+        survives a power loss."""
         tmp = self._latest_path(table) + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self._latest_path(table))
-        return v
+        _fsync_path(self._tdir(table))
 
     # ------------------------------------------------------------ ops
     def create(self, table: str, schema: T.StructType) -> None:
@@ -474,10 +490,7 @@ class Catalog:
         Later data dirs stay on disk but are unreferenced."""
         if not os.path.exists(self._snap_path(table, version)):
             raise ValueError(f"{table}: no snapshot v{version}")
-        tmp = self._latest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._latest_path(table))
+        self._flip_latest(table, version)
 
     def snapshot_ids(self, tables: list[str]) -> dict[str, int]:
         return {t: self.current_version(t) for t in tables if self.exists(t)}

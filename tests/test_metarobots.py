@@ -26,6 +26,10 @@ CASES = [
     (b"\xff\xfe\x00garbage<meta name=robots content=noindex>more\xff", True, False),
     (b"", False, False),
     (None, False, False),
+    # directives with ':' and digits before the token (was fail-open)
+    (b'<meta name="robots" content="max-snippet:-1, noindex">', True, False),
+    (b"<meta content='max-image-preview:large, nofollow' name=robots>", False, True),
+    (b"<meta name=robots content=max-snippet:-1,noindex>", True, False),
 ]
 
 

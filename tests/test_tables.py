@@ -280,3 +280,44 @@ def test_frontier_state_migration_on_resume(spark, tmp_path):
     # compaction select must not crash on the widened table
     eng.store.queued(current_round=5).count()
     eng.store.compact()
+
+
+def test_commit_is_durable_in_order(spark, tmp_path, monkeypatch):
+    """A commit fsyncs the manifest and its directory entry BEFORE the
+    _latest flip, and the table dir after it: a power loss can never
+    leave _latest naming a truncated or missing manifest, nor lose the
+    flip once the commit returned. Rollback flips the same way."""
+    cat = Catalog(spark, str(tmp_path))
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", (st.st_dev, st.st_ino)))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", dst))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+
+    def ino(p):
+        st = os.stat(p)
+        return st.st_dev, st.st_ino
+
+    def flip(tdir, latest):
+        return [("fsync", ino(latest)), ("replace", latest), ("fsync", ino(tdir))]
+
+    cat.create("t", SCHEMA)
+    tdir = os.path.join(str(tmp_path), "t")
+    latest = os.path.join(tdir, "_latest")
+    snaps = os.path.join(tdir, "snapshots")
+    manifest = os.path.join(snaps, "s-00000001.json")
+    assert events == [
+        ("fsync", ino(manifest)), ("fsync", ino(snaps)), *flip(tdir, latest)
+    ]
+    events.clear()
+    cat.rollback("t", 1)
+    assert events == flip(tdir, latest)
